@@ -1,0 +1,40 @@
+package graft.perfbench
+
+/** Minimal JSON writer for the run record (maps, sequences, strings,
+  * numbers, booleans).
+  */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }
+        .mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case sp: Span => apply(Map("id" -> sp.id, "parent" -> sp.parent,
+      "trace" -> sp.trace, "kind" -> sp.kind, "name" -> sp.name,
+      "start_ms" -> sp.startMs, "end_ms" -> sp.endMs, "attrs" -> sp.attrs))
+    case x => quote(x.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+}
