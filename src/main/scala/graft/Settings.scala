@@ -5,9 +5,22 @@ import org.apache.spark.sql.SparkSession
 /** Env-driven runtime settings — the engine's single config surface
   * (the reference centralizes its operational knobs the same way:
   * ref src/core/config.py:1-12 reads the broker/DB/batch knobs from
-  * the environment into one settings object). Every `SPARK_GRAFT_*`
-  * variable the driver contract mentions is read HERE, once, with its
-  * default beside it — operators never touch `sys.env`.
+  * the environment into one settings object). The engine's whole
+  * environment surface is nine `SPARK_GRAFT_*` variables. Seven are
+  * read HERE, once, with their defaults beside them:
+  *
+  *  - `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_REPEAT`,
+  *    `SPARK_GRAFT_QUERIES`, `SPARK_GRAFT_MAX_PARTITION_BYTES` — the
+  *    case-class fields below;
+  *  - `SPARK_GRAFT_SCRATCH_DIR` ([[Settings.scratchDir]]) and
+  *    `SPARK_GRAFT_ARTIFACT_DIR` ([[Settings.artifactRoot]]).
+  *
+  * Two are read by the `main` that owns them: `SPARK_GRAFT_BENCH_OUT`
+  * (the [[Bench]] result file) and `SPARK_GRAFT_PLAN_FINAL`
+  * ([[graft.tools.PlanDump]]'s executed-plan mode). Operators,
+  * functions, plans, sources and streaming never read the environment
+  * or system properties (`ConfigSurfaceSpec` enforces it); their
+  * tuning values are constants.
   *
   * @param sfDir    corpus directory (`SPARK_GRAFT_SF_DIR`)
   * @param cpus     local worker threads AND shuffle partitions
@@ -17,13 +30,13 @@ import org.apache.spark.sql.SparkSession
   * @param repeat   bench repetitions per query (`SPARK_GRAFT_REPEAT`)
   * @param queries  optional bench/verify subset (`SPARK_GRAFT_QUERIES`,
   *                 comma-separated)
+  * @param maxPartitionBytes scan split size
+  *                 (`SPARK_GRAFT_MAX_PARTITION_BYTES`)
   *
-  * The artifact-store root (`SPARK_GRAFT_ARTIFACT_DIR`) is also read
-  * here ([[Settings.artifactRoot]]) — it is JVM-global rather than
-  * per-session (the store addresses by content fingerprints, not by
-  * session), so it lives on the companion instead of the case class;
-  * `off` disables lake persistence, specs redirect via
-  * `ArtifactStore.rootOverride`.
+  * The artifact-store root is JVM-global rather than per-session (the
+  * store addresses by content fingerprints, not by session), so it
+  * lives on the companion instead of the case class; `off` disables
+  * lake persistence, specs redirect via `ArtifactStore.rootOverride`.
   */
 final case class Settings(
     sfDir: String,

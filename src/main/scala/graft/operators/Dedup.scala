@@ -618,9 +618,8 @@ object Dedup {
     // stops each partition early — a full count of a multi-GB
     // checkpointed edge set would scan every block just to learn
     // "big". Under the cap the probe IS the exact count.
-    val gateRows = math.min(Par.RowsPerSlice, (Int.MaxValue - 2).toLong)
     val edgeCount = edges.select("doc_a")
-      .limit(gateRows.toInt + 1).count()
+      .limit(Par.RowsPerSlice.toInt + 1).count()
     // LOCAL FAST PATH: when the whole edge relation fits one slice
     // (≤ Par.RowsPerSlice rows — tens of MB), the distributed loop is
     // pure per-stage fixed cost: ~6 byte-tiny stages × O(log diameter)
@@ -643,7 +642,7 @@ object Dedup {
       // no edges ⇒ the flood is already at its fixpoint (and a
       // 0-partition relation cannot zip)
       if (edgeCount == 0) return labels
-      if (edgeCount <= gateRows) return localFlood(edges, labels)
+      if (edgeCount <= Par.RowsPerSlice) return localFlood(edges, labels)
     }
     // The edge relation is the BIG, LOOP-INVARIANT side — shuffle it
     // ONCE: persisted hash-partitioned on the join key, the cached
@@ -683,7 +682,7 @@ object Dedup {
         // the width
         edges.select("doc_a", "doc_b")
           .repartition(Par.roundWidth(
-            if (edgeCount > gateRows) edges.count() else edgeCount,
+            if (edgeCount > Par.RowsPerSlice) edges.count() else edgeCount,
             Par.RowsPerSlice / 4), col("doc_b"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else edges.select("doc_a", "doc_b")

@@ -30,8 +30,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    exchange, while a one-file local scan spreads its per-row work
   *    across the machine for the cost of shuffling a few MB.
   *  - [[slices]] is the explicit width for kernel self-joins whose
-  *    blocking relation is repartitioned by join key anyway: a few
-  *    slices per core bounds the worst task at ~1/(4·cores) of the
+  *    blocking relation is repartitioned by join key anyway: one
+  *    slice per core bounds the worst task near 1/cores of the
   *    kernel mass (the r20 profile's hot-task wall: 24 AQE-coalesced
   *    partitions put 1.87 s of a 1.88 s stage on one task), and an
   *    explicit `repartition(n, keys)` both pre-positions the relation
@@ -40,24 +40,18 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 private[graft] object Par {
 
-  /** Kernel-stage width: a few slices per core. On a cluster
+  /** Kernel-stage width: one slice per core. On a cluster
     * `defaultParallelism` tracks total executor cores, so this stays
-    * "4 waves of tasks" at any deployment size — partitions stay in
-    * the 100 MB-1 GB band once the data is big (e.g. the sf10 fat
-    * banding relation at 10.7 GB / 128 slices ≈ 84 MB per slice).
+    * one wave of tasks at any deployment size. Per-task fixed costs
+    * (plan deserialization, codegen cache lookup, shuffle fetch
+    * setup — measured ~100-200 ms/task on the r20 sandbox) are paid
+    * once per core, at the price of coarser skew smoothing; the
+    * measured A/B at sf0.1 (d_edit_dup / d_lsh_jaccard /
+    * d_minhash_est) put four waves' overhead above their skew win at
+    * every tested query.
     */
   def slices(df: DataFrame): Int =
-    df.sparkSession.sparkContext.defaultParallelism * SliceWaves
-
-  /** Task waves per kernel stage. 1 = one task per core: per-task
-    * fixed costs (plan deserialization, codegen cache lookup, shuffle
-    * fetch setup — measured ~100-200 ms/task on the r20 sandbox) are
-    * paid once per core, at the price of coarser skew smoothing; the
-    * measured A/B at sf0.1 (d_edit_dup / d_lsh_jaccard / d_minhash_est)
-    * put waves=4's overhead above its skew win at every tested query.
-    */
-  private val SliceWaves: Int =
-    sys.env.getOrElse("SPARK_GRAFT_SLICE_WAVES", "1").toInt
+    df.sparkSession.sparkContext.defaultParallelism
 
   /** Hash fan-out by `cols` to session parallelism when the plan is
     * narrower than the session's core count; identity otherwise.
@@ -74,8 +68,7 @@ private[graft] object Par {
     * work (~100-200 ns/row): ~1M rows ≈ parity, so below it the task
     * is scheduling-bound and wider is strictly worse.
     */
-  val RowsPerSlice: Long =
-    sys.env.getOrElse("SPARK_GRAFT_ROWS_PER_SLICE", "1048576").toLong
+  val RowsPerSlice: Long = 1048576L
 
   /** Partition count for a loop-invariant relation of `rows` rows that
     * every ROUND of an iterative query re-joins (r21, guide §2.5/§2.6
@@ -100,8 +93,7 @@ private[graft] object Par {
     * target produced (parquet compresses a (long, long) edge ~10×,
     * so 32 MB of file bytes is ~30M rows of derivation).
     */
-  val ScanRowsPerSlice: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_ROWS_PER_SLICE", "262144").toLong
+  val ScanRowsPerSlice: Long = 262144L
 
   /** Size-adaptive NO-SHUFFLE compaction of a small scan (r21): lake
     * artifact tables are written 16-way bucketed so writes

@@ -1656,8 +1656,7 @@ object Similarity {
     * rows grow ×A, the split-capped join stays ≤ R·(A·n)·cap — linear
     * in corpus size at any A.
     */
-  val KnnAssign: Int =
-    sys.env.getOrElse("SPARK_GRAFT_KNN_ASSIGN", "4").toInt
+  val KnnAssign = 4
 
   /** GRAPH-FAMILY codebook sizing (r19, the r18 verdict's #1): the kNN
     * graph blocks candidates on quantizer cells, so its cost dial is
@@ -1770,17 +1769,13 @@ object Similarity {
     * cells (4.7×; train 21 s vs 40 s). Default now
     * KnnMaxK·MaxKnnCell/4 ≈ 262k: past a quarter-million vectors the
     * quadratic assignment term costs more than the ~21%
-    * blocking-recall trade buys, and the probe dial buys recall back
-    * explicitly. Overridable (env or sys.prop) so the spec and the
-    * A/B grids can force either path; oracle-gated SFs sit far below
-    * any sane setting (G28 exercises the path by calling it
-    * directly).
+    * blocking-recall trade buys, and the probe width buys recall back
+    * explicitly. Oracle-gated SFs sit far below the threshold; G28
+    * and the spec exercise the two-level path by calling
+    * [[withTwoLevelCells]] directly.
     */
-  private[graft] def knnTwoLevelPast: Long =
-    sys.props.get("graft.knn.twoLevelPast")
-      .orElse(sys.env.get("SPARK_GRAFT_KNN_TWO_LEVEL_PAST"))
-      .map(_.toLong)
-      .getOrElse(KnnMaxK.toLong * MaxKnnCell / 4)
+  private[graft] val KnnTwoLevelPast: Long =
+    KnnMaxK.toLong * MaxKnnCell / 4
 
   /** COARSE-PROBE width for two-level assignment (r20, the r19
     * verdict's #1): how many nearest TOP cells are probed before
@@ -1795,44 +1790,20 @@ object Similarity {
     * standard: assignment cost grows T/⌈√a⌉× in the map-only kernel,
     * the index mass (a cells/vector) is unchanged, and cross-top true
     * neighbors the coarse argmin misplaced become co-indexable again.
-    * Env/sys.prop-dialable (absolute); the DEFAULT is max(8, k1/2) —
-    * the sf10 grid (BASELINE.md r20) measured recall 3307/3854/4010 bp
-    * at t = 8/16/32 of k1 = 32 tops vs single-level 4869 at the same
-    * 1024 effective cells, i.e. probing half the coarse level lands
-    * ~79% of flat k-means blocking recall while halving flat's
-    * per-vector assignment compute (t·k2 < K leaf scans); the probe
-    * dial is the documented recall/assignment-cost trade past the
-    * activation scale.
+    * The width is max(8, k1/2) — the sf10 grid (BASELINE.md r20)
+    * measured recall 3307/3854/4010 bp at t = 8/16/32 of k1 = 32 tops
+    * vs single-level 4869 at the same 1024 effective cells, i.e.
+    * probing half the coarse level lands ~79% of flat k-means
+    * blocking recall while halving flat's per-vector assignment
+    * compute (t·k2 < K leaf scans).
     */
-  private[graft] def knnTwoLevelProbe(k1: Int): Int =
-    sys.props.get("graft.knn.twoLevelProbe")
-      .orElse(sys.env.get("SPARK_GRAFT_KNN_TWO_LEVEL_PROBE"))
-      .map(_.toInt)
-      .getOrElse(math.max(8, k1 / 2))
+  private[graft] def knnTwoLevelProbe(k1: Int): Int = math.max(8, k1 / 2)
 
-  /** [[knnTwoLevelProbe]] as a DuckDB scalar — the dialed literal
-    * when the dial is set, else GREATEST(8, k1/2) over the trained
-    * [[tlKSql]] sizing, engine-identical integer arithmetic.
+  /** [[knnTwoLevelProbe]] as a DuckDB scalar: GREATEST(8, k1/2) over
+    * the trained [[tlKSql]] sizing, engine-identical integer
+    * arithmetic. A def, because [[tlKSql]] is initialized below.
     */
-  private def tlProbeSql: String =
-    sys.props.get("graft.knn.twoLevelProbe")
-      .orElse(sys.env.get("SPARK_GRAFT_KNN_TWO_LEVEL_PROBE"))
-      .map(_.toInt.toString)
-      .getOrElse(s"GREATEST(8, $tlKSql // 2)")
-
-  /** Lloyd rounds for the LOCAL residual sub-codebooks — dialable
-    * separately from [[KmeansRounds]] because a local round is CHEAP
-    * (n·k2·dim — each residual scores only its own top's k2 subs,
-    * never the full leaf set) while leaf-cell quality is exactly what
-    * the two-level recall story rests on. Read once at object init
-    * (the oracle CTE chain is built from it), env/sys-prop dialable
-    * for the A/B grid.
-    */
-  private[graft] val KnnLocalRounds: Int =
-    sys.props.get("graft.knn.localRounds")
-      .orElse(sys.env.get("SPARK_GRAFT_KNN_LOCAL_ROUNDS"))
-      .map(_.toInt)
-      .getOrElse(KmeansRounds)
+  private def tlProbeSql: String = s"GREATEST(8, $tlKSql // 2)"
 
   /** (k1, k2) sizing: total target K = smallest power of two with
     * K·MaxKnnCell ≥ n, k1 = k2 = smallest power of two with k1² ≥ K.
@@ -1976,7 +1947,9 @@ object Similarity {
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
           .sortBy(_._1)
-        for (_ <- 1 to KnnLocalRounds)
+        // same round count as the top level: more local rounds were
+        // measured to HURT blocking recall (2812 bp at 4, BASELINE r20)
+        for (_ <- 1 to KmeansRounds)
           c2 = kmeansRoundLocal(s, res, c2, k2)
         res.unpersist(blocking = false)
         (c1, c2)
@@ -1986,7 +1959,7 @@ object Similarity {
   /** `df` + an exploded `cell` column: the row's `a` assigned graph-
     * quantizer cells — THE one assignment surface every graph-family
     * consumer goes through (a = 1 is the primary/argmin assignment).
-    * Single-level below [[knnTwoLevelPast]] (the map-only kernel
+    * Single-level below [[KnnTwoLevelPast]] (the map-only kernel
     * expression, bit-identical to the r18 path); two-level past it
     * (r20 — hierarchical, multi-probed): t = max(⌈√a⌉,
     * [[knnTwoLevelProbe]]) nearest tops by the k1 kernel, residual
@@ -2003,7 +1976,7 @@ object Similarity {
   private[graft] def withKnnCells(s: SparkSession, dir: String,
       df: DataFrame, a: Int): DataFrame = {
     val n = Tables.embeddings(s, dir).count()
-    if (n <= knnTwoLevelPast)
+    if (n <= KnnTwoLevelPast)
       df.withColumn("cell", explode(transform(
         slice(array_sort(ivfCells(knnCodebook(s, dir))), 1, a),
         c => c.getField("cell"))))
@@ -2013,8 +1986,7 @@ object Similarity {
   /** The two-level assignment itself, threshold-free — the body of
     * [[withKnnCells]]' past-threshold branch, callable directly so
     * the oracle-gated G27 row (`s_ann_two_level`) exercises this
-    * exact path at every correctness SF without mutating the global
-    * threshold dial.
+    * exact path at every correctness SF.
     */
   private[graft] def withTwoLevelCells(s: SparkSession, dir: String,
       df: DataFrame, a: Int): DataFrame = {
@@ -2110,7 +2082,7 @@ object Similarity {
     * (r19 verdict #7: the component was spec-only; every oracle SF
     * sits below the activation threshold, so this row calls
     * [[withTwoLevelCells]] DIRECTLY — the exact past-threshold
-    * assignment path, no global dial mutation). Shape = G14's probe
+    * assignment path). Shape = G14's probe
     * read on the two-level primary cell: train both codebooks
     * ([[knnCodebook2]] — top Lloyd at k1, residual Lloyd at k2),
     * assign every vector its primary cell = argmin over the
@@ -2118,7 +2090,7 @@ object Similarity {
     * distance, then scan probe 0's cell with the exact kernel.
     * The DuckDB oracle replays BOTH Lloyd chains (top level = the
     * [[sKmeans]] CTE chain at [[tlKSql]]'s k1; residual level =
-    * [[KnnLocalRounds]] generated assign/refresh rounds over
+    * [[KmeansRounds]] generated assign/refresh rounds over
     * rv = v − c1[argmin] against each top's OWN local sub-codebook —
     * combined cell ids, top = cl // k2 — with init = the k2 smallest
     * vec_ids' residuals PER TOP) and the multi-probe argmin
@@ -2166,7 +2138,7 @@ object Similarity {
        |        FROM res0) s
        |  JOIN res0 r ON r.vec_id = s.vec_id
        |  WHERE s.sub < $tlKSql),
-       |${(1 to KnnLocalRounds).map(i =>
+       |${(1 to KmeansRounds).map(i =>
            s"ra$i AS (${tlResAssignSql(s"rc${i - 1}")}),\nrc$i AS (" +
              tlResRefreshSql(s"ra$i") + ")").mkString(",\n")},
        |ptop AS (
@@ -2189,7 +2161,7 @@ object Similarity {
        |      row_number() OVER (PARTITION BY r.vec_id ORDER BY
        |        list_sum(list_transform(list_zip(r.rv, s.v),
        |          z -> (z[1] - z[2]) * (z[1] - z[2]))), s.cl) AS rn
-       |    FROM pres r JOIN rc$KnnLocalRounds s
+       |    FROM pres r JOIN rc$KmeansRounds s
        |      ON s.cl // $tlKSql = r.top)
        |  WHERE rn = 1),
        |asg AS (
@@ -2442,27 +2414,22 @@ object Similarity {
     * indexes — with the graph build amortized as the standing G20
     * artifact every other curation consumer already maintains.
     */
-  /** Walk quality dials, env-overridable for the dial sweep
-    * ([[graft.tools.WalkDial]] — the G25/KnnAssign A-ladder pattern):
-    * the oracle SQL interpolates whatever the JVM was started with,
-    * so parity holds at ANY dial setting. r19 pinned beam 16→64 from
-    * the sf0.01 grid (the entry frontier was that corpus's binding
-    * loss channel); the r20 sf1 grid (r19 verdict #9, BASELINE.md)
-    * shows the sf0.01 "rounds stay 4" conclusion was SATURATION, not
-    * physics — at 20k vectors the graph is deep enough that rounds
-    * bind (beam 64: 4000 bp at rounds 4 → 7000 at rounds 8; beam
-    * 128: 4000 → 9000) while beam alone buys nothing past 64
-    * (128/r4 = 64/r4 = 4000). Defaults re-pinned 64→128 beam,
-    * 4→8 rounds (walk cost ~5.5 s vs 3.8 at sf1 — per-round cost is
-    * beam-sized, so the deeper walk is cheap); reach scales with
-    * graph diameter ~ log n, so a fixed default trails at the next
-    * decade by construction — the dial, not the constant, is the
-    * contract.
+  /** Walk quality constants; the oracle SQL interpolates the same
+    * values. r19 pinned beam 16→64 from the sf0.01 grid (the entry
+    * frontier was that corpus's binding loss channel); the r20 sf1
+    * grid (r19 verdict #9, BASELINE.md) shows the sf0.01 "rounds
+    * stay 4" conclusion was SATURATION, not physics — at 20k vectors
+    * the graph is deep enough that rounds bind (beam 64: 4000 bp at
+    * rounds 4 → 7000 at rounds 8; beam 128: 4000 → 9000) while beam
+    * alone buys nothing past 64 (128/r4 = 64/r4 = 4000). Re-pinned
+    * 64→128 beam, 4→8 rounds (walk cost ~5.5 s vs 3.8 at sf1 —
+    * per-round cost is beam-sized, so the deeper walk is cheap).
+    * Reach scales with graph diameter ~ log n, so fixed values trail
+    * at the next decade by construction; a walk that must keep up
+    * derives its beam from the data rather than from a constant.
     */
-  val WalkBeam: Int =
-    sys.env.getOrElse("SPARK_GRAFT_WALK_BEAM", "128").toInt
-  val WalkRounds: Int =
-    sys.env.getOrElse("SPARK_GRAFT_WALK_ROUNDS", "8").toInt
+  val WalkBeam = 128
+  val WalkRounds = 8
 
   /** LOCAL FAST PATH for the walk (r21, the [[Dedup.propagate]]
     * localFlood stance): when vectors AND graph edges each fit one

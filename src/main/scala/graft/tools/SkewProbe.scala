@@ -28,11 +28,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object SkewProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0)
-      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val settings = graft.Settings.fromEnv()
+    val sfDir = if (args.length > 0) args(0) else settings.sfDir
     val queries = if (args.length > 1) args(1).split(",").toSeq
       else Seq("d_minhash_lsh", "s_knn_graph")
-    val spark = graft.Settings.fromEnv().buildSession(aqe = true)
+    val spark = settings.buildSession(aqe = true)
     // make AQE's skew mitigation engage at probe scale (same confs on
     // both sides of an A/B run)
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",

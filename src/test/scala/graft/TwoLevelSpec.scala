@@ -3,13 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The r19 two-level residual quantizer (the graph family's path past
-  * [[graft.operators.Similarity.knnTwoLevelPast]] vectors), exercised
-  * on the sf0.001 corpus by forcing the threshold down — no
+  * [[graft.operators.Similarity.KnnTwoLevelPast]] vectors), exercised
+  * on the sf0.001 corpus by calling
+  * [[graft.operators.Similarity.withTwoLevelCells]] directly — no
   * billion-row corpus needed to pin the algebra. Runs against a
-  * throwaway artifact root so the forced-degenerate codebooks never
-  * poison the shared store, and restores the threshold in `finally`
-  * so the rest of the suite stays on the single-level path (the
-  * toggle is read per call, not cached).
+  * throwaway artifact root so the small-corpus codebooks never
+  * poison the shared store.
   */
 class TwoLevelSpec extends SparkSpec {
   import graft.operators.Similarity
@@ -19,11 +18,10 @@ class TwoLevelSpec extends SparkSpec {
     val tmp = java.nio.file.Files
       .createTempDirectory("graft_twolevel").toString
     graft.sources.ArtifactStore.rootOverride = Some(tmp)
-    sys.props("graft.knn.twoLevelPast") = "100"
     try {
       val emb = Tables.embeddings(spark, sf)
       val n = emb.count()
-      assert(n > 100, "corpus must sit past the forced threshold")
+      assert(n > 100, "corpus must be big enough to train both levels")
       val (k1, k2) = Similarity.knnTwoLevelK(n)
       // the product codebook covers the occupancy target
       assert(k1.toLong * k2 * Similarity.MaxKnnCell >= n,
@@ -31,7 +29,7 @@ class TwoLevelSpec extends SparkSpec {
 
       // ---- multi-assignment shape: a=4 → 4 DISTINCT in-range cells
       def cellsAt(a: Int): Map[Long, Seq[Long]] =
-        Similarity.withKnnCells(spark, sf, emb, a)
+        Similarity.withTwoLevelCells(spark, sf, emb, a)
           .select("vec_id", "cell").collect()
           .map(r => (r.getLong(0), r.getLong(1)))
           .groupBy(_._1).map { case (v, cs) =>
@@ -87,23 +85,23 @@ class TwoLevelSpec extends SparkSpec {
           s"vec $id: primary ${prim(id)} ≠ brute ${best._2}")
       }
 
-      // ---- FULL probe = exhaustive: forcing the probe dial to k1
-      // makes the primary the TRUE argmin over every k1·k2 cell —
-      // pins the cross-top ranking algebra (the true-distance trim)
-      sys.props("graft.knn.twoLevelProbe") = c1.length.toString
-      try {
-        val primFull = cellsAt(1).map { case (v, cs) => v -> cs.head }
-        for ((id, v) <- mv) {
-          val exhaustive = c1.flatMap { case (top, tcv) =>
-            val rv = v.zip(tcv).map { case (x, y) => x - y }
-            c2.filter(_._1 / k2 == top)
-              .map { case (cid, cv) => (sq(rv, cv), cid) }
-          }.min
-          assert(primFull(id) === exhaustive._2,
-            s"vec $id: full-probe primary ${primFull(id)} ≠ " +
-              s"exhaustive argmin ${exhaustive._2}")
-        }
-      } finally sys.props.remove("graft.knn.twoLevelProbe")
+      // ---- FULL probe = exhaustive: on this corpus the default
+      // probe width already covers every surviving top, so the
+      // primary is the TRUE argmin over every k1·k2 cell — pins the
+      // cross-top ranking algebra (the true-distance trim)
+      assert(Similarity.knnTwoLevelProbe(k1) >= c1.length,
+        s"probe width ${Similarity.knnTwoLevelProbe(k1)} must cover " +
+          s"all ${c1.length} tops for the exhaustive check")
+      for ((id, v) <- mv) {
+        val exhaustive = c1.flatMap { case (top, tcv) =>
+          val rv = v.zip(tcv).map { case (x, y) => x - y }
+          c2.filter(_._1 / k2 == top)
+            .map { case (cid, cv) => (sq(rv, cv), cid) }
+        }.min
+        assert(prim(id) === exhaustive._2,
+          s"vec $id: full-probe primary ${prim(id)} ≠ " +
+            s"exhaustive argmin ${exhaustive._2}")
+      }
 
       // ---- non-square a: the t·⌈a/t⌉ overshoot trims to exactly a
       // cells, a subset of the square superset
@@ -112,7 +110,6 @@ class TwoLevelSpec extends SparkSpec {
       assert(a3.forall { case (v, cs) => cs.forall(a4(v).contains) },
         "the trimmed set is a subset of the a=4 assignment")
     } finally {
-      sys.props.remove("graft.knn.twoLevelPast")
       graft.sources.ArtifactStore.rootOverride = None
       graft.Artifacts.clear(spark, sf)
     }
