@@ -1095,28 +1095,20 @@ object Dedup {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** [[clusterTableRefresh]] under optimistic-concurrency retry, the
-    * streamingMergeBatch stance: another writer (compaction,
-    * maintenance, a second stream) committing between latestVersion
-    * and merge raises ConcurrentModificationException — re-run the
+  /** [[clusterTableRefresh]] under the lake's optimistic-concurrency
+    * retry ([[graft.sources.LakeMerge.retryOnConflict]]): another
+    * writer (compaction, maintenance, a second stream) committing
+    * between latestVersion and merge raises
+    * ConcurrentModificationException — re-run the
     * refresh against the FRESH snapshot (each attempt re-reads the
     * standing table and recomputes its delta, and refresh is
     * idempotent, so a retry after a half-won race no-ops) instead of
     * letting the exception kill a streaming query.
     */
   def clusterTableRefreshRetry(s: SparkSession, tableDir: String,
-      newEdges: DataFrame, maxRetries: Int = 5): Int = {
-    var attempt = 0
-    while (true) {
-      try return clusterTableRefresh(s, tableDir, newEdges)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    -1 // unreachable
-  }
+      newEdges: DataFrame, maxRetries: Int = 5): Int =
+    graft.sources.LakeMerge.retryOnConflict(maxRetries)(
+      clusterTableRefresh(s, tableDir, newEdges))
 
   // ---------------------------------------------------------------- F9
   /** The deduplicated corpus — the operation the cluster map exists

@@ -69,19 +69,17 @@ object ChangeStream {
     */
   def advanceView(s: SparkSession, srcDir: String, viewDir: String,
       appId: String, groupCol: String, sumCol: String,
-      countAs: String = "n_rows", sumAs: String = "total",
-      maxRetries: Int = 5): Long = {
+      countAs: String = "n_rows", sumAs: String = "total"): Long = {
     val app = watermarkApp(appId)
-    var attempt = 0
-    while (true) {
+    LakeMerge.retryOnConflict() {
       val srcTip = LakeMerge.latestVersion(s, srcDir).toLong
       val consumed = LakeMerge.lastTxn(s, viewDir, app)
       // a tick wired before the source's FIRST commit: latestVersion
       // is -1 and there is no snapshot to read — no-op (keep the
       // current watermark) instead of crashing the always-on query
-      if (srcTip < 0) return consumed.getOrElse(-1L)
-      if (consumed.exists(_ >= srcTip)) return consumed.get
-      try {
+      if (srcTip < 0) consumed.getOrElse(-1L)
+      else if (consumed.exists(_ >= srcTip)) consumed.get
+      else {
         val feed = consumed match {
           case Some(v) => LakeMerge.changes(s, srcDir, v.toInt,
             Some(srcTip.toInt), updatePreimages = true)
@@ -117,14 +115,9 @@ object ChangeStream {
           .withColumn("_vseq", lit(srcTip))
         LakeMerge.merge(s, viewDir, batch, opCol = Some("op"),
           baseVersion = Some(viewVersion), txn = Some(app -> srcTip))
-        return srcTip
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        srcTip
       }
     }
-    -1L // unreachable
   }
 
   /** The always-on form: every tick of `ticks` advances the view to
@@ -176,17 +169,16 @@ object ChangeStream {
     * call is a no-op.
     */
   def advanceMirror(s: SparkSession, srcDir: String, dstDir: String,
-      appId: String, maxRetries: Int = 5): Long = {
+      appId: String): Long = {
     val app = s"cdc-mirror:$appId"
-    var attempt = 0
-    while (true) {
+    LakeMerge.retryOnConflict() {
       val srcTip = LakeMerge.latestVersion(s, srcDir).toLong
       val consumed = LakeMerge.lastTxn(s, dstDir, app)
       // same pre-first-commit guard as advanceView: no snapshot yet,
       // keep the watermark, never read version -1
-      if (srcTip < 0) return consumed.getOrElse(-1L)
-      if (consumed.exists(_ >= srcTip)) return consumed.get
-      try {
+      if (srcTip < 0) consumed.getOrElse(-1L)
+      else if (consumed.exists(_ >= srcTip)) consumed.get
+      else {
         val feed = consumed match {
           case Some(v) => LakeMerge.changes(s, srcDir, v.toInt,
             Some(srcTip.toInt))
@@ -201,14 +193,9 @@ object ChangeStream {
           .drop("_change_type")
         LakeMerge.merge(s, dstDir, batch, opCol = Some("op"),
           baseVersion = Some(dstV), txn = Some(app -> srcTip))
-        return srcTip
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
+        srcTip
       }
     }
-    -1L // unreachable
   }
 
   /** Always-on mirror: every tick advances the replica to the source

@@ -1335,23 +1335,29 @@ object LakeMerge {
     * double-apply.
     */
   def streamingMergeBatch(dir: String, appId: String,
-      opCol: Option[String] = None, maxRetries: Int = 5)
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val s = batch.sparkSession
-    var attempt = 0
-    var done = false
-    while (!done) {
-      if (lastTxn(s, dir, appId).exists(_ >= batchId)) done = true
-      else {
-        try { merge(s, dir, batch, opCol, txn = Some(appId -> batchId)); done = true }
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt > maxRetries) throw e
-        }
+      opCol: Option[String] = None): (DataFrame, Long) => Unit = {
+    (batch, batchId) =>
+      val s = batch.sparkSession
+      retryOnConflict() {
+        if (!lastTxn(s, dir, appId).exists(_ >= batchId))
+          merge(s, dir, batch, opCol, txn = Some(appId -> batchId))
       }
-    }
   }
+
+  /** Optimistic-concurrency retry, the one loop every lake writer
+    * shares: `body` reads the latest snapshot and commits against it;
+    * when a racing writer wins the commit, the merge raises
+    * ConcurrentModificationException and `body` re-runs against the
+    * fresh snapshot, at most `maxRetries` more times before the
+    * conflict propagates. `body` must re-check its own idempotence
+    * guard (txn watermark, empty delta) so a retry never double-applies.
+    */
+  def retryOnConflict[A](maxRetries: Int = 5)(body: => A): A =
+    try body
+    catch {
+      case _: java.util.ConcurrentModificationException if maxRetries > 0 =>
+        retryOnConflict(maxRetries - 1)(body)
+    }
 
   /** Merge-on-read DELETE: remove `keys` — a `(dt, key)` relation —
     * from the latest snapshot WITHOUT rewriting any data file. The

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** JDBC sink battery (SURVEY §2 D4) — the reference writes its star
   * schema to MySQL (ref src/database/database.py, controllers/
@@ -116,42 +116,21 @@ object JdbcSink {
     }
   }
 
-  /** Stream → JDBC via foreachBatch (the production shape of
-    * ReportStream.pipeline's sink). Routes through the upsert
-    * statement over `keyCols`, NOT plain appends — retries of a
-    * partially-written micro-batch are absorbed by the table's
-    * unique key instead of duplicating rows.
+  /** Stream → JDBC via foreachBatch: every micro-batch goes through
+    * [[writeIdempotent]] with `sql` — build it over `df.columns` with
+    * [[upsertSql]] (MySQL) or [[insertIfAbsentSql]] (any ANSI engine;
+    * the form the live Derby spec drives end to end). Never plain
+    * appends: a replayed or partially-written micro-batch re-sends
+    * keys the table already holds and its unique key absorbs them.
     */
-  def streamToJdbc(df: DataFrame, url: String, table: String,
-      user: String, password: String, checkpointDir: String,
-      keyCols: Seq[String]): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeIdempotent(batch, url, user, password,
-          upsertSql(table, batch.columns.toSeq, keyCols))
-      }
-      .start()
-
-  /** Stream → JDBC through the ANSI NOT-EXISTS insert — the same pipe
-    * as [[streamToJdbc]] for engines without MySQL's INSERT IGNORE
-    * (and the form the live Derby integration spec drives end to
-    * end). Same exactly-once contract: a replayed micro-batch
-    * re-sends keys the table already holds and the guard absorbs
-    * them.
-    */
-  def streamToJdbcIfAbsent(df: DataFrame, url: String, table: String,
-      user: String, password: String, checkpointDir: String,
-      keyCol: String, types: Seq[String],
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      : StreamingQuery =
+  def streamToJdbc(df: DataFrame, url: String, user: String,
+      password: String, checkpointDir: String, sql: String,
+      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeIdempotent(batch, url, user, password,
-          insertIfAbsentSql(table, batch.columns.toSeq, keyCol, types))
+        writeIdempotent(batch, url, user, password, sql)
       }
       .start()
 }

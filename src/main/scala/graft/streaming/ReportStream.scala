@@ -99,14 +99,20 @@ object ReportStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(dir)
 
-  /** D1: the full pipe. Valid rows land in outDir/reports, failures
-    * in outDir/dead_letter with a reason AND the v2 `KafkaReport`
-    * requeue payload (ref main.py:79-97: the reference re-serializes
-    * failed batches via convert_stg_to_kafka_report and puts them
-    * back on the error queue; `requeue_json` is that exact wire
-    * format, ready for a Kafka sink's `value` column).
+  /** D1/D10: the reference's WHOLE job as one streaming pipe — Kafka-
+    * shaped source → cleanse/split → star-normalized FACT rows in
+    * outDir/fact_report, failures in outDir/dead_letter with a reason
+    * AND the v2 `KafkaReport` requeue payload (ref main.py:79-97: the
+    * reference re-serializes failed batches via
+    * convert_stg_to_kafka_report and puts them back on the error
+    * queue; `requeue_json` is that exact wire format, ready for a
+    * Kafka sink's `value` column). The fact projection is the batch
+    * star's own (`Star.factProjection`, map-only hash-keyed), so
+    * streamed facts are row-identical to a batch backfill over the
+    * same events — spec-asserted. Sink is the bounded idempotent
+    * appendDedup keyed on event_id, partitioned by reported month.
     */
-  def pipeline(events: DataFrame, outDir: String,
+  def pipelineStar(events: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery = {
     // D18: per-micro-batch telemetry via the Observation API — the
     // counts an operator pages on (rows in, dead-letter share, high-
@@ -128,39 +134,6 @@ object ReportStream {
         // uncached, every action re-runs the source scan (and would
         // triple-count the D18 observation); cached, the micro-batch
         // materializes exactly once
-        batch.persist()
-        try {
-          val valid = batch.filter(col("event_type") =!= "error")
-          val dead = batch.filter(col("event_type") === "error")
-            .withColumn("reason", lit("bad_type"))
-          appendDedup(valid, s"$outDir/reports", Seq("event_id"))
-          if (!dead.isEmpty)
-            withRequeueJson(dead)
-              .write.mode("append").parquet(s"$outDir/dead_letter")
-        } finally batch.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** D10: the reference's WHOLE job as one streaming pipe — Kafka-
-    * shaped source → cleanse/split → star-normalized FACT rows in the
-    * lake, dead letters with the v2 requeue payload. The fact
-    * projection is the batch star's own (`Star.factProjection`,
-    * map-only hash-keyed), so streamed facts are row-identical to a
-    * batch backfill over the same events — spec-asserted. Sink is the
-    * bounded idempotent appendDedup keyed on event_id, partitioned by
-    * reported month.
-    */
-  def pipelineStar(events: DataFrame, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val parsed = parsedEvents(events)
-    parsed.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // same persist stance as [[pipeline]]: two sinks, one scan
         batch.persist()
         try {
           val valid = batch.filter(col("event_type") =!= "error")
@@ -208,9 +181,13 @@ object ReportStream {
     * scan): with a watermarked source a batch's event-time span is
     * bounded, so the read side stays O(batch window), not O(sink
     * history) — the r1 version broadcast the ENTIRE sink, which grows
-    * without bound. Missing sink path is detected explicitly
-    * (FileSystem.exists); any other read error fails the batch so the
-    * checkpoint retries it instead of silently disabling dedup.
+    * without bound. The key read carries the batch's own `key :+
+    * p_month` schema, so it never infers one from the sink's files
+    * (an inference job per batch) and an existing directory with no
+    * committed parquet yet (a crashed first write) reads as empty.
+    * Missing sink path is detected explicitly (FileSystem.exists); any
+    * other read error fails the batch so the checkpoint retries it
+    * instead of silently disabling dedup.
     */
   def appendDedup(batch: DataFrame, path: String, key: Seq[String],
       tsCol: String = "ts"): Unit = {
@@ -233,27 +210,16 @@ object ReportStream {
       val fresh =
         if (!fs.exists(hPath)) deduped
         else {
-          val existing =
-            try {
-              // bounded: months touched by THIS batch (≤ watermark span)
-              val months = deduped.select(part).distinct()
-                .collect().map(_.getLong(0))
-              Some(spark.read.parquet(path)
-                .filter(col(part).isin(months.toIndexedSeq: _*))
-                .select(key.map(col): _*))
-            } catch {
-              // dir exists but holds no committed parquet yet (a
-              // crashed first write): treat as empty sink. Anything
-              // else propagates so the checkpoint retries the batch.
-              case e: org.apache.spark.sql.AnalysisException
-                  if e.getMessage.contains("Unable to infer schema") ||
-                    e.getMessage.contains("PATH_NOT_FOUND") => None
-            }
-          existing match {
-            // no forced broadcast: AQE sizes the pruned read at runtime
-            case Some(ex) => deduped.join(ex.distinct(), key, "left_anti")
-            case None => deduped
-          }
+          // bounded: months touched by THIS batch (≤ watermark span)
+          val months = deduped.select(part).distinct()
+            .collect().map(_.getLong(0))
+          val existing = spark.read
+            .schema(deduped.select((key :+ part).map(col): _*).schema)
+            .parquet(path)
+            .filter(col(part).isin(months.toIndexedSeq: _*))
+            .select(key.map(col): _*)
+          // no forced broadcast: AQE sizes the pruned read at runtime
+          deduped.join(existing, key, "left_anti")
         }
       fresh.write.mode("append").partitionBy(part).parquet(path)
     } finally { deduped.unpersist(); () }

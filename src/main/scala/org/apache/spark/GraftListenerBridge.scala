@@ -1,13 +1,12 @@
 package org.apache.spark
 
 /** Package-private-API bridge (the `GraftColumnBridge` idiom, one
-  * level up the package tree): Bench's per-query max-task-rows
-  * instrument reads its listener's value AFTER the async listener bus
-  * has delivered the tail of task-end events. `listenerBus
-  * .waitUntilEmpty()` is the deterministic drain — the same call
-  * Spark's own test harness uses — vs the 2-second sleep
-  * `graft.tools.SkewProbe` pays per query, unaffordable at 166
-  * queries per bench run.
+  * level up the package tree): the per-query max-task-rows
+  * instruments (Bench and `graft.tools.SkewProbe`) read their
+  * listener's value AFTER the async listener bus has delivered the
+  * tail of task-end events. `listenerBus.waitUntilEmpty()` is the
+  * deterministic drain — the same call Spark's own test harness uses
+  * — instead of a fixed sleep per query.
   */
 object GraftListenerBridge {
   /** Block until every queued listener event has been delivered. */

@@ -31,7 +31,7 @@ class GracefulShutdownSpec extends SparkSpec {
         Paths.get(s"$in/e$i.parquet"), StandardCopyOption.REPLACE_EXISTING)
     }
     val src = ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf))
-    val q = ReportStream.pipeline(src, out, ck)
+    val q = ReportStream.pipelineStar(src, out, ck)
     // the deploy signal arrives while batches are in flight: drain —
     // wait out the current trigger, stop, and NEVER kill mid-batch
     ReportStream.drainAndStop(Seq(q))
@@ -52,15 +52,15 @@ class GracefulShutdownSpec extends SparkSpec {
 
     // rollout completes: restart from the same checkpoint processes
     // exactly the unprocessed remainder
-    val q2 = ReportStream.pipeline(
+    val q2 = ReportStream.pipelineStar(
       ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf)),
       out, ck)
     q2.awaitTermination(120000)
     q2.stop()
-    val reports = spark.read.parquet(s"$out/reports")
-    assert(reports.count() === nAll - nErr,
+    val facts = spark.read.parquet(s"$out/fact_report")
+    assert(facts.count() === nAll - nErr,
       "sink must hold each valid event exactly once across the stop")
-    assert(reports.groupBy("event_id").count()
+    assert(facts.groupBy("event_id").count()
       .filter(col("count") > 1).count() === 0,
       "no event may be duplicated by the stop/restart")
     // all three files were processed in whole batches, each at least
@@ -69,7 +69,7 @@ class GracefulShutdownSpec extends SparkSpec {
     // micro-batch (TOCTOU inherent to a drain — a real signal races
     // the same way); that torn batch replays on restart, and the
     // append-only dead-letter path then carries its error share twice.
-    // The contract is whole batches + no loss; the REPORTS sink above
+    // The contract is whole batches + no loss; the FACT sink above
     // is where exactly-once is owed (and asserted).
     val nDeadFinal = spark.read.parquet(s"$out/dead_letter").count()
     assert(nDeadFinal % nErr === 0 && nDeadFinal >= 3 * nErr,

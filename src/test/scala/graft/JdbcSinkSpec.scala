@@ -65,9 +65,9 @@ class JdbcSinkSpec extends SparkSpec {
       val src = graft.streaming.ReportStream
         .fileSource(spark, in, Tables.eventsRaw(spark, sf))
         .select("event_id", "user_id", "event_type")
-      val q = JdbcSink.streamToJdbcIfAbsent(src,
-        url, "fact_stream", "", "", ck, "event_id",
-        Seq("BIGINT", "BIGINT", "VARCHAR(32)"),
+      val q = JdbcSink.streamToJdbc(src, url, "", "", ck,
+        JdbcSink.insertIfAbsentSql("fact_stream", src.columns.toSeq,
+          "event_id", Seq("BIGINT", "BIGINT", "VARCHAR(32)")),
         trigger = Trigger.AvailableNow())
       q.awaitTermination(120000)
       q.stop()

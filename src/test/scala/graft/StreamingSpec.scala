@@ -24,17 +24,19 @@ class StreamingSpec extends SparkSpec {
     val ck = tempDir("graft_ck")
     stageEvents(in)
     val src = ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf))
-    val q = ReportStream.pipeline(src, out, ck)
+    val q = ReportStream.pipelineStar(src, out, ck)
     q.awaitTermination(120000)
     q.stop() // deterministic teardown: no async final-batch vs JVM-exit race
 
     val events = Tables.events(spark, sf)
-    val nErr = events.filter(col("event_type") === "error").count()
-    val reports = spark.read.parquet(s"$out/reports")
+    val errors = events.filter(col("event_type") === "error")
+    val nErr = errors.count()
+    val facts = spark.read.parquet(s"$out/fact_report")
     val dead = spark.read.parquet(s"$out/dead_letter")
-    assert(reports.count() === events.count() - nErr)
+    assert(facts.count() === events.count() - nErr)
     assert(dead.count() === nErr)
-    assert(reports.filter(col("event_type") === "error").count() === 0)
+    assert(facts.join(errors, Seq("event_id"), "left_semi").count() === 0,
+      "no error event may become a fact")
     assert(dead.select("reason").distinct().head().getString(0) === "bad_type")
     // dead letters carry the v2 KafkaReport requeue payload
     assert(dead.columns.contains("requeue_json"))
@@ -54,7 +56,7 @@ class StreamingSpec extends SparkSpec {
     Files.copy(Paths.get(s"$sf/events.parquet"),
       Paths.get(s"$in/e2.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val src = ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf))
-    val q = ReportStream.pipeline(src, out, ck)
+    val q = ReportStream.pipelineStar(src, out, ck)
     q.awaitTermination(120000)
     q.stop()
     val obs = q.recentProgress.toSeq
@@ -81,6 +83,11 @@ class StreamingSpec extends SparkSpec {
     val n2 = spark.read.parquet(s"$out/t").count()
     assert(n1 === 100)
     assert(n2 === n1, "replayed batch must be fully deduped")
+    // a crashed first write leaves the sink dir with no committed
+    // parquet: it must read as an empty sink, not fail the batch
+    new java.io.File(s"$out/crashed/_temporary").mkdirs()
+    ReportStream.appendDedup(batch, s"$out/crashed", Seq("event_id"))
+    assert(spark.read.parquet(s"$out/crashed").count() === 100)
   }
 
   test("D3 bounded sink: month-partitioned layout, partial-overlap replay") {
@@ -882,6 +889,70 @@ class StreamingSpec extends SparkSpec {
       "the late file's (shifted, equally-valid) rows must all land")
     assert(facts.groupBy("event_id").count()
       .filter(col("count") > 1).count() === 0)
+  }
+
+  test("torn star batch: sink written but commit lost — the replay " +
+    "adds no facts and re-appends only that batch's dead letters") {
+    // the parquet twin of JdbcSinkSpec's crash INSIDE the foreachBatch
+    // commit: both sinks of the last batch are durable, but the
+    // checkpoint never recorded its commit, so the restart re-runs it
+    // from the offsets log — the fact sink's anti-join is all that
+    // stands between that replay and duplicated facts
+    val in = tempDir("graft_torn_in")
+    val out = tempDir("graft_torn_out")
+    val ck = tempDir("graft_torn_ck")
+    stageEvents(in)
+    val run = () => {
+      val q = ReportStream.pipelineStar(
+        ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf)),
+        out, ck)
+      q.awaitTermination(120000)
+      q.stop()
+      q
+    }
+    run()
+    // batch 1: a disjoint-id half of the events, so the torn batch's
+    // error share differs from batch 0's
+    val staging = tempDir("graft_torn_stage")
+    Tables.eventsRaw(spark, sf).filter(col("event_id") % 2 === 0)
+      .withColumn("event_id", col("event_id") + 10000000L)
+      .coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new java.io.File(staging).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, Paths.get(s"$in/late_events.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    run()
+    val factsBefore = spark.read.parquet(s"$out/fact_report").count()
+    val deadBefore = spark.read.parquet(s"$out/dead_letter").count()
+
+    // tear the last batch: its sink writes stay, its commit is lost
+    val last = new java.io.File(s"$ck/commits").list()
+      .filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(last === 1L)
+    Files.delete(Paths.get(s"$ck/commits/$last"))
+    Files.deleteIfExists(Paths.get(s"$ck/commits/.$last.crc"))
+    val replayed = run().recentProgress.filter(_.numInputRows > 0)
+    assert(replayed.map(_.batchId).toSeq === Seq(last),
+      "the restart must re-run exactly the torn batch")
+
+    val facts = spark.read.parquet(s"$out/fact_report").drop("p_month")
+    assert(facts.count() === factsBefore,
+      "the replayed batch must add zero facts")
+    val sent = ReportStream.parsedEvents(spark.read
+      .schema(Tables.eventsRaw(spark, sf).schema).parquet(in))
+    val expected = graft.operators.Star.factProjection(
+      sent.filter(col("event_type") =!= "error").dropDuplicates("event_id"))
+    assert(facts.count() === expected.count())
+    assert(facts.except(expected).count() === 0 &&
+      expected.except(facts).count() === 0,
+      "facts must equal the batch projection of the distinct valid events")
+    // dead letters are append-only (the GracefulShutdownSpec contract):
+    // the replay re-appends exactly the torn batch's error rows
+    val tornErr = spark.read.parquet(staging)
+      .filter(col("event_type") === "error").count()
+    assert(tornErr > 0)
+    assert(spark.read.parquet(s"$out/dead_letter").count() ===
+      deadBefore + tornErr)
   }
 
   test("kafka sink options carry idempotent-producer settings") {
