@@ -40,10 +40,14 @@ import org.apache.spark.sql.functions._
   * committed via [[LakeMerge.init]]. Artifact relations are treated
   * as SETS: byte-identical duplicate rows collapse under the (dt,
   * key) dedup — every artifact in the engine is a distinct-row index
-  * or model, so this is a no-op in practice. Builds are deterministic
-  * (oracle-gated), so two sessions racing to persist the same
-  * fingerprint write identical content and the create-exclusive
-  * manifest commit picks a winner harmlessly.
+  * or model, so this is a no-op in practice.
+  *
+  * One claim protocol ([[claim]]) serves all three entry points: a
+  * build lands in a `.build-*` sibling of its address and one rename
+  * claims the address. Builds are deterministic (oracle-gated), so
+  * two sessions racing to persist the same fingerprint write
+  * identical content and the rename picks a winner harmlessly; the
+  * loser drops its own copy and serves the winner's.
   *
   * Root resolution: `SPARK_GRAFT_ARTIFACT_DIR` (a production
   * deployment points this at durable shared storage, e.g. the bucket
@@ -193,6 +197,10 @@ object ArtifactStore {
   private def unwrap(df: DataFrame): DataFrame =
     df.drop(MetaCols: _*)
 
+  /** Commit `df` as the single-snapshot artifact table at `dir`. */
+  private def commit(s: SparkSession, dir: String, df: DataFrame): Unit =
+    LakeMerge.init(s, dir, wrap(df), "_adt", "_akey", "_aseq")
+
   private def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(s"$dir/_manifest/v0.json"))
 
@@ -247,14 +255,13 @@ object ArtifactStore {
     }
 
   /** Quarantine a CORRUPT committed dir by renaming it aside
-    * (tombstone), never recursive-delete: a rename leaves a
-    * concurrent builder's in-flight data files intact under the
-    * tombstoned name instead of deleting them mid-write, keeps the
+    * (tombstone), never recursive-delete: a rename never deletes
+    * files a concurrent reader of the address still holds, keeps the
     * bytes for post-mortem, and the tombstone (still a committed
     * single-snapshot table under the family dir) ages out through the
     * normal [[vacuum]] retention by its own v0 commit stamp.
-    * Best-effort (an unwritable root just leaves the throw to the
-    * rebuild fallback).
+    * Best-effort: if the rename fails the corrupt dir keeps the
+    * address and the rebuild's claim loses to it.
     */
   private def quarantine(s: SparkSession, dir: String): Unit =
     try {
@@ -263,174 +270,120 @@ object ArtifactStore {
       if (!f.rename(new Path(dir), dst)) () // racing quarantine won
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Load-failure policy: quarantine only a VERIFIED-corrupt dir
-    * (tombstoned aside), then RE-VERIFY the address — a racing
-    * session may have tombstoned and rebuilt it already, in which
-    * case the fresh v0 is read instead of built a second time. A
-    * transient failure leaves the table untouched and falls through
-    * to the build path, whose create-exclusive commit turns into a
-    * plain re-read via the ConcurrentModificationException branch.
+  /** The one claim protocol behind all three entry points. A standing
+    * dir at the address is served unless it is verifiably corrupt
+    * ([[isCorrupt]]), in which case it is tombstoned aside
+    * ([[quarantine]]) and rebuilt. A build lands in a sibling
+    * `.build-*` dir and ONE rename claims the address; the loser of a
+    * race deletes its own bytes and serves the winner's
+    * (rename-into-existing fails on every relevant FS). `serve` turns
+    * the claimed address into the artifact and gets the build's
+    * result when this call built it. If build-and-claim throws (an
+    * unusable root, a failed rename, a failed build) the event is
+    * recorded as `build` and the session-local form `local` is served
+    * instead; `local` runs the build again, so a real build failure
+    * still surfaces. With persistence off `local` is all there is.
     */
-  private def recoverLoad[T](s: SparkSession, dir: String)(
-      retry: => T): Option[T] =
-    if (!isCorrupt(s, dir)) None
-    else {
-      quarantine(s, dir)
-      if (exists(s, dir))
-        try Some(retry)
-        catch { case scala.util.control.NonFatal(_) => None }
-      else None
-    }
-
-  /** Lake-else-build-and-commit for a DataFrame artifact. The
-    * returned relation is parquet-backed (fault-tolerant, shared
-    * across sessions); with persistence disabled it degrades to the
-    * eager localCheckpoint handle. An EMPTY build result persists
-    * like any other (zero-partition snapshots read back as an empty
-    * relation with the recorded schema); a committed table that
-    * fails to READ is quarantined and rebuilt instead of crashing
-    * every session that addresses the fingerprint.
-    */
-  def materialize(s: SparkSession, family: String, corpusDir: String)(
-      build: => DataFrame): DataFrame = {
-    if (!enabled) return build.localCheckpoint(true)
+  private def claim[B, T](s: SparkSession, family: String,
+      corpusDir: String)(build: String => B)(
+      serve: (String, Option[B]) => T)(local: => T): T = {
+    def scoped[R](body: => R): R =
+      graft.Artifacts.nestedScope(family, corpusDir)(body)
+    def record(t0: Long, kind: String): Unit =
+      graft.Artifacts.record(family, corpusDir,
+        (System.nanoTime() - t0) / 1000000, kind)
+    if (!enabled) return scoped(local)
     val dir = tableDir(s, family, corpusDir)
-    def loadIt(): DataFrame = unwrap(LakeMerge.read(s, dir))
-    val loaded: Option[DataFrame] =
-      if (!exists(s, dir)) None
-      else {
-        val t0 = System.nanoTime()
+    val standing = exists(s, dir) &&
+      (!isCorrupt(s, dir) || { quarantine(s, dir); false })
+    val t0 = System.nanoTime()
+    if (standing) {
+      val out = serve(dir, None)
+      bump(loadCounts, family)
+      record(t0, "lake_load")
+      out
+    } else try {
+      ensureRoot(s)
+      val f = fs(s, dir)
+      val tmp = new Path(dir + ".build-" +
+        java.util.UUID.randomUUID().toString.take(8))
+      var claimed = false
+      val built =
         try {
-          val out = loadIt()
-          bump(loadCounts, family)
-          graft.Artifacts.record(family, corpusDir,
-            (System.nanoTime() - t0) / 1000000, "lake_load")
-          Some(out)
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            recoverLoad(s, dir) {
-              val out = loadIt(); bump(loadCounts, family); out
-            }
-        }
-      }
-    loaded.getOrElse {
-      val t0 = System.nanoTime()
-      val built = graft.Artifacts.nestedScope(family, corpusDir)(build)
-      try {
-        ensureRoot(s)
-        LakeMerge.init(s, dir, wrap(built), "_adt", "_akey", "_aseq")
-        bump(saveCounts, family)
-        val out = loadIt()
-        graft.Artifacts.record(family, corpusDir,
-          (System.nanoTime() - t0) / 1000000, "build_persist")
-        out
-      } catch {
-        // another session committed v0 first: read the winner
-        case _: java.util.ConcurrentModificationException =>
-          bump(loadCounts, family)
-          loadIt()
-        // unwritable root: stay session-local for this run
-        case scala.util.control.NonFatal(_) =>
-          graft.Artifacts.record(family, corpusDir,
-            (System.nanoTime() - t0) / 1000000, "build")
-          built.localCheckpoint(true)
-      }
-    }
-  }
-
-  /** Lake-else-build for a whole TABLE-DIRECTORY artifact (r15
-    * verdict #8) — the L-family demo tables (merged / conditional /
-    * MOR / restored) whose artifact is not one relation but a lake
-    * dir with a specific VERSION HISTORY the consumers pin into
-    * (`read(..., Some(1))`, change feeds, meta stats). `build` gets a
-    * fresh path and must leave a committed table there; the content
-    * address (corpus + code fingerprint) guarantees any code change
-    * re-builds, so a cold JVM on an unchanged build serves the
-    * standing directory for the cost of a manifest probe — the same
-    * warmup stance the dedup/ANN artifacts have, applied to the four
-    * 3.8-4.7 s cold-bench builds.
-    *
-    * Concurrency: the build lands in a sibling `.build-*` dir and ONE
-    * rename claims the address — the loser deletes its own bytes and
-    * serves the winner's (rename-into-existing fails on every
-    * relevant FS). A verified-corrupt standing dir is tombstoned
-    * aside (the [[quarantine]] policy) and rebuilt.
-    */
-  def materializeDir(s: SparkSession, family: String,
-      corpusDir: String)(build: String => Unit): String = {
-    def tmpBuild(): String = {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_${family.replace('.', '_')}")
-        .toString
-      graft.Artifacts.nestedScope(family, corpusDir)(build(tmp))
-      tmp
-    }
-    if (!enabled) return tmpBuild()
-    val dir = tableDir(s, family, corpusDir)
-    val f = fs(s, dir)
-    def serveStanding(): Option[String] =
-      if (!exists(s, dir)) None
-      else if (!isCorrupt(s, dir)) {
-        bump(loadCounts, family)
-        graft.Artifacts.record(family, corpusDir, 0, "lake_load")
-        Some(dir)
-      } else { quarantine(s, dir); None }
-    serveStanding().getOrElse {
-      val t0 = System.nanoTime()
-      // The fallback catch is scoped to ROOT/RENAME failures only: a
-      // failure inside build() itself propagates (silently re-running
-      // an expensive broken build would just fail twice, slower).
-      val rootOk =
-        try { ensureRoot(s); true }
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!rootOk) {
-        // unwritable root: stay session-local for this run
-        val tmp = tmpBuild()
-        graft.Artifacts.record(family, corpusDir,
-          (System.nanoTime() - t0) / 1000000, "build")
-        tmp
-      } else {
-        val tmp = dir + ".build-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        var claimed = false
-        try {
-          // propagates — never silently rebuilt
-          graft.Artifacts.nestedScope(family, corpusDir)(build(tmp))
+          val b = scoped(build(tmp.toString))
           // Claim by rename. On HDFS-like filesystems rename(src,
           // existingDst) moves src INTO dst and returns true, so an
           // existing dst is a lost race BEFORE renaming; after a true
           // rename, the claim must show a readable v0 manifest at the
           // address AND no nested build tree (the into-existing
           // signature) before it counts as ours.
-          val nested = new Path(dir, new Path(tmp).getName)
+          val nested = new Path(dir, tmp.getName)
           claimed =
             try {
-              !f.exists(new Path(dir)) &&
-                f.rename(new Path(tmp), new Path(dir)) && {
-                  if (f.exists(nested)) { f.delete(nested, true); false }
-                  else exists(s, dir)
-                }
+              !f.exists(new Path(dir)) && f.rename(tmp, new Path(dir)) && {
+                if (f.exists(nested)) { f.delete(nested, true); false }
+                else exists(s, dir)
+              }
             } catch { case scala.util.control.NonFatal(_) => false }
-          if (claimed) {
-            bump(saveCounts, family)
-            graft.Artifacts.record(family, corpusDir,
-              (System.nanoTime() - t0) / 1000000, "build_persist")
-          } else {
-            // a racing session claimed the address: serve the winner
-            bump(loadCounts, family)
-          }
-          dir
+          b
         } finally {
-          // rename never happened (or nested): never leave a partial
-          // .build-* under the family root
-          if (!claimed) {
-            try f.delete(new Path(tmp), true)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
+          // never leave a partial .build-* under the family root
+          if (!claimed) f.delete(tmp, true)
         }
+      if (claimed) {
+        bump(saveCounts, family)
+        val out = serve(dir, Some(built))
+        record(t0, "build_persist")
+        out
+      } else {
+        // a racing session claimed the address: serve the winner
+        bump(loadCounts, family)
+        serve(dir, None)
       }
+    } catch {
+      case scala.util.control.NonFatal(_) =>
+        val out = scoped(local)
+        record(t0, "build")
+        out
     }
   }
+
+  /** Lake-else-build-and-commit for a DataFrame artifact: the build
+    * is committed as a LakeMerge v0 table and claimed by [[claim]].
+    * The returned relation is parquet-backed (fault-tolerant, shared
+    * across sessions); with persistence off, or when build-and-claim
+    * fails, it is the eager localCheckpoint handle. An EMPTY build
+    * result persists like any other (zero-partition snapshots read
+    * back as an empty relation with the recorded schema).
+    */
+  def materialize(s: SparkSession, family: String, corpusDir: String)(
+      build: => DataFrame): DataFrame =
+    claim(s, family, corpusDir)(commit(s, _, build)) { (dir, _) =>
+      unwrap(LakeMerge.read(s, dir))
+    }(build.localCheckpoint(true))
+
+  /** Lake-else-build for a whole TABLE-DIRECTORY artifact (r15
+    * verdict #8) — the L-family demo tables (merged / conditional /
+    * MOR / restored) whose artifact is not one relation but a lake
+    * dir with a specific VERSION HISTORY the consumers pin into
+    * (`read(..., Some(1))`, change feeds, meta stats). `build` gets a
+    * fresh path and must leave a committed table there, which
+    * [[claim]] then claims; the content address (corpus + code
+    * fingerprint) guarantees any code change re-builds, so a cold JVM
+    * on an unchanged build serves the standing directory for the cost
+    * of a manifest probe. With persistence off, or when
+    * build-and-claim fails, the table is built in a session-local tmp
+    * dir.
+    */
+  def materializeDir(s: SparkSession, family: String,
+      corpusDir: String)(build: String => Unit): String =
+    claim(s, family, corpusDir)(build)((dir, _) => dir) {
+      val tmp = java.nio.file.Files
+        .createTempDirectory(s"graft_${family.replace('.', '_')}")
+        .toString
+      build(tmp)
+      tmp
+    }
 
   /** Retention for the artifact root: every engine recompile and
     * every corpus change re-addresses its artifacts under a fresh
@@ -441,13 +394,14 @@ object ArtifactStore {
     * whole table dirs at a time. Unparseable dirs (a torn
     * half-written build that never committed) are deleted too — with
     * no v0 manifest nothing can ever read them — but only once their
-    * directory mtime is past the cutoff: data files land BEFORE the
-    * manifest commit, so an unconditional delete would race an
-    * in-flight build in another session and strip its persist out
-    * from under the init. Returns the deleted dirs. Safe to run
-    * concurrently with readers of LIVE fingerprints (current code +
-    * corpus always re-derives a current address, and a current build
-    * is never older than the cutoff a retention policy uses).
+    * directory mtime is past the cutoff: a build's data files land in
+    * its `.build-*` dir BEFORE the manifest commit, so an
+    * unconditional delete would race an in-flight build in another
+    * session and strip its persist out from under the init. Returns
+    * the deleted dirs. Safe to run concurrently with readers of LIVE
+    * fingerprints (current code + corpus always re-derives a current
+    * address, and a current build is never older than the cutoff a
+    * retention policy uses).
     */
   def vacuum(spark: SparkSession, olderThanMs: Long): Seq[String] = {
     val rootDir = configuredRoot
@@ -478,48 +432,19 @@ object ArtifactStore {
 
   /** Lake-else-build-and-commit for a DRIVER-SIDE artifact (codebook
     * arrays, bound pairs, merge tables): the value round-trips
-    * through a small DataFrame, so a fresh session re-collects the
-    * trained model instead of re-training it.
+    * through a small DataFrame committed and claimed by [[claim]], so
+    * a fresh session re-collects the trained model instead of
+    * re-training it. Returns the value itself when this call built
+    * it, the lake's copy otherwise; with persistence off, or when
+    * build-and-claim fails, the value is built and served
+    * session-local.
     */
   def materializeValue[V](s: SparkSession, family: String,
       corpusDir: String)(build: => V)(
-      toDf: V => DataFrame)(fromDf: DataFrame => V): V = {
-    if (!enabled) return build
-    val dir = tableDir(s, family, corpusDir)
-    val loaded: Option[V] =
-      if (!exists(s, dir)) None
-      else {
-        val t0 = System.nanoTime()
-        try {
-          val out = fromDf(unwrap(LakeMerge.read(s, dir)))
-          bump(loadCounts, family)
-          graft.Artifacts.record(family, corpusDir,
-            (System.nanoTime() - t0) / 1000000, "lake_load")
-          Some(out)
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            recoverLoad(s, dir) {
-              val out = fromDf(unwrap(LakeMerge.read(s, dir)))
-              bump(loadCounts, family); out
-            }
-        }
-      }
-    loaded.getOrElse {
-      val t0 = System.nanoTime()
-      val built = graft.Artifacts.nestedScope(family, corpusDir)(build)
-      try {
-        ensureRoot(s)
-        LakeMerge.init(s, dir, wrap(toDf(built)), "_adt", "_akey", "_aseq")
-        bump(saveCounts, family)
-        graft.Artifacts.record(family, corpusDir,
-          (System.nanoTime() - t0) / 1000000, "build_persist")
-      } catch {
-        case _: java.util.ConcurrentModificationException => ()
-        case scala.util.control.NonFatal(_) =>
-          graft.Artifacts.record(family, corpusDir,
-            (System.nanoTime() - t0) / 1000000, "build")
-      }
-      built
-    }
-  }
+      toDf: V => DataFrame)(fromDf: DataFrame => V): V =
+    claim(s, family, corpusDir) { tmp =>
+      val v = build; commit(s, tmp, toDf(v)); v
+    } { (dir, built) =>
+      built.getOrElse(fromDf(unwrap(LakeMerge.read(s, dir))))
+    }(build)
 }

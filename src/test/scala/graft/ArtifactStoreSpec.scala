@@ -137,12 +137,13 @@ class ArtifactStoreSpec extends SparkSpec {
     "both read identical rows (create-exclusive manifest claim)") {
     withTempRoot {
       // two genuinely concurrent materializations of the same
-      // (family, corpus): the loser's LakeMerge.init throws
-      // ConcurrentModificationException and must fall through to
-      // reading the winner's table — never a duplicate commit, never
-      // a crash. Builds are deterministic, so either interleaving
-      // (loser-reads-winner, or second-call-sees-existing) yields
-      // byte-identical rows.
+      // (family, corpus): each racer builds into its own `.build-*`
+      // sibling and tries to claim the address with one rename; a
+      // loser finds the address taken, deletes its own build and
+      // reads the winner's table — never a duplicate commit, never a
+      // crash, never a stranded build dir. Builds are deterministic,
+      // so either interleaving (loser-reads-winner, or
+      // second-call-sees-existing) yields byte-identical rows.
       import spark.implicits._
       val corpus = java.nio.file.Files
         .createTempDirectory("graft_race_corpus").toString
@@ -181,6 +182,10 @@ class ArtifactStoreSpec extends SparkSpec {
         .map(_.getName).filter(_.startsWith("v")).sorted.toSeq
       assert(mf === Seq("v0.json"),
         s"expected exactly one committed version, found $mf")
+      val d = new java.io.File(dir)
+      val stranded = d.getParentFile.listFiles().map(_.getName)
+        .filter(_.startsWith(d.getName + ".build-")).toSeq
+      assert(stranded.isEmpty, s"losing builds left behind: $stranded")
     }
   }
 
@@ -358,6 +363,49 @@ class ArtifactStoreSpec extends SparkSpec {
     } finally {
       ArtifactStore.rootOverride = None
       Artifacts.clear(spark)
+    }
+  }
+
+  test("an artifact root that is a regular FILE cannot hold tables: " +
+    "all three entry points build session-local, record `build` and " +
+    "commit nothing") {
+    val root = java.nio.file.Files.createTempFile("graft_artroot", "")
+    ArtifactStore.rootOverride = Some(root.toString)
+    try {
+      import spark.implicits._
+      val corpus = tempCorpus()
+      val fams = Seq("file.df", "file.value", "file.dir")
+      def builds(fam: String) = Artifacts.countOf(fam, "build")
+      val b0 = fams.map(builds)
+      val s0 = fams.map(ArtifactStore.saves)
+      val df = ArtifactStore.materialize(spark, "file.df", corpus) {
+        Seq((1L, 2L), (3L, 4L)).toDF("k", "v")
+      }
+      assert(sorted(df) === Seq("[1,2]", "[3,4]"))
+      val v = ArtifactStore.materializeValue(spark, "file.value", corpus)(
+        Seq(5L, 6L))(_.toDF("x"))(_.as[Long].collect().toSeq)
+      assert(v === Seq(5L, 6L))
+      val dir = ArtifactStore.materializeDir(spark, "file.dir", corpus) {
+        tmp =>
+          sources.LakeMerge.init(spark, tmp, Seq(("a", 1L, 0L))
+            .toDF("dt", "k", "o"), "dt", "k", "o"); ()
+      }
+      assert(sources.LakeMerge.read(spark, dir)
+        .select("k").as[Long].collect().toSeq === Seq(1L))
+      assert(fams.map(builds) === b0.map(_ + 1),
+        "each fallback must record one `build` event")
+      assert(fams.map(ArtifactStore.saves) === s0,
+        "nothing can be committed under a file root")
+      assert(root.toFile.isFile && root.toFile.length === 0,
+        "the root file must be left as it was")
+      val stranded = root.getParent.toFile.listFiles().map(_.getName)
+        .filter(n => n.startsWith(root.getFileName.toString) &&
+          n.contains(".build-")).toSeq
+      assert(stranded.isEmpty, s"build dirs left behind: $stranded")
+    } finally {
+      ArtifactStore.rootOverride = None
+      Artifacts.clear(spark)
+      java.nio.file.Files.deleteIfExists(root)
     }
   }
 
