@@ -37,6 +37,10 @@ import org.apache.spark.sql.SparkSession
   * store addresses by content fingerprints, not by session), so it
   * lives on the companion instead of the case class; `off` disables
   * lake persistence, specs redirect via `ArtifactStore.rootOverride`.
+  *
+  * Every session (this one and the specs' `SparkSpec.session`) also
+  * takes [[Settings.LocalFileIo]]: two constant Hadoop entries, not
+  * settable names.
   */
 final case class Settings(
     sfDir: String,
@@ -80,6 +84,7 @@ final case class Settings(
       // machine; overridable via SPARK_GRAFT_MAX_PARTITION_BYTES so a
       // deployment keeps control of scan sizing.
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
+      .config(Settings.LocalFileIo)
     // Block-manager/shuffle scratch: Spark defaults to java.io.tmpdir
     // (/tmp), which some hosts reap even under a LIVE JVM — a long
     // verify/bench leg then dies mid-run with
@@ -102,6 +107,32 @@ final case class Settings(
 object Settings {
   /** 32 MB — see the buildSession comment on scan parallelism. */
   val DefaultMaxPartitionBytes: Long = 33554432L
+
+  /** Hadoop `file:` I/O in process. Without Hadoop's native library
+    * the stock local filesystem forks a `chmod` for every permission
+    * it sets (every `mkdirs`, every `create` with a permission) and a
+    * `readlink` for every link-status lookup (both ends of each
+    * FileContext rename, i.e. each streaming checkpoint commit). A
+    * perfbench `pipe_small` run forked 1,166 `chmod` and 656
+    * `readlink`, a `registry` run 1,243 `chmod`. These two entries
+    * put [[graft.sources.NioRawLocalFileSystem]] (one NIO call each)
+    * under both Hadoop APIs:
+    *
+    *  - `fs.file.impl`: the FileSystem API (parquet writes, listings,
+    *    the artifact store, the sink's `mkdirs`);
+    *  - `fs.AbstractFileSystem.file.impl`: the FileContext API, which
+    *    Spark's default checkpoint file manager uses (that manager
+    *    stays in place, so every other scheme keeps FileContext's
+    *    rename semantics).
+    *
+    * Both are keyed by the `file` scheme and touch nothing else: HDFS
+    * and the object stores never forked for these calls.
+    */
+  val LocalFileIo: Map[String, Any] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.sources.NioLocalFs].getName)
 
   /** Spark scratch (blockmgr + shuffle temp) when SPARK_LOCAL_DIRS is
     * unset: a working-directory-local dir rather than /tmp, because
