@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 import graft.{Q, Tables}
 
 /** Star-schema normalization — the reference's core write path
@@ -31,27 +32,32 @@ object Star {
     */
   val MaxBroadcastDimRows = 1000000L
 
+  /** One equipment slot id: exact int64 mix of user and event ids. */
+  private def slot(m1: Long, m2: Long) =
+    Cleanse.clampSmallint((col("user_id") * m1 + col("event_id") * m2) % 40000L)
+
   /** Events enriched with the reference report's derived fields
     * (sighting triple, location tuple, gear ids) via exact int64
     * arithmetic — the hash-stable analog of the report payload.
     * Factored over any events-shaped DataFrame (batch or streaming).
     */
   private[graft] def enrich(df: DataFrame): DataFrame =
+    // two projection steps, not a withColumn chain (one analysis per
+    // call, paid on every micro-batch): `reported_id` reads the new
+    // `k`, so `k` goes first and the JSON path is extracted once
     df
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .withColumn("reporting_id", col("user_id"))
-      .withColumn("reported_id", col("k"))
-      .withColumn("manual_detect", col("event_id") % 2)
-      .withColumn("region_id", lit(10000L) + col("user_id") % 500)
-      .withColumn("x_coord", (col("event_id") * 31) % 5000)
-      .withColumn("y_coord", (col("event_id") * 37) % 5000)
-      .withColumn("z_coord", col("event_id") % 4)
-      .withColumn("g_head",
-        Cleanse.clampSmallint((col("user_id") * 7919L + col("event_id") * 13L) % 40000L))
-      .withColumn("g_torso",
-        Cleanse.clampSmallint((col("user_id") * 104729L + col("event_id") * 17L) % 40000L))
-      .withColumn("g_weapon",
-        Cleanse.clampSmallint((col("user_id") * 1299709L + col("event_id") * 19L) % 40000L))
+      .withColumns(ListMap(
+        "reporting_id" -> col("user_id"),
+        "reported_id" -> col("k"),
+        "manual_detect" -> col("event_id") % 2,
+        "region_id" -> (lit(10000L) + col("user_id") % 500),
+        "x_coord" -> (col("event_id") * 31) % 5000,
+        "y_coord" -> (col("event_id") * 37) % 5000,
+        "z_coord" -> col("event_id") % 4,
+        "g_head" -> slot(7919L, 13L),
+        "g_torso" -> slot(104729L, 17L),
+        "g_weapon" -> slot(1299709L, 19L)))
 
   private[graft] def enriched(s: SparkSession, dir: String): DataFrame =
     enrich(Tables.events(s, dir))
@@ -293,22 +299,18 @@ object Star {
     * 9 equipment slots plus the world flags, derived with exact int64
     * arithmetic from the events stream.
     */
-  private def slot(m1: Long, m2: Long) =
-    Cleanse.clampSmallint((col("user_id") * m1 + col("event_id") * m2) % 40000L)
-
   private[graft] def enrichFull(df: DataFrame): DataFrame =
-    enrich(df)
-      .withColumn("g_amulet", slot(7907L, 23L))
-      .withColumn("g_legs", slot(7901L, 29L))
-      .withColumn("g_boots", slot(7883L, 31L))
-      .withColumn("g_cape", slot(7879L, 37L))
-      .withColumn("g_hands", slot(7873L, 41L))
-      .withColumn("g_shield", slot(7867L, 43L))
-      .withColumn("on_members_world", col("user_id") % 2L)
-      .withColumn("on_pvp_world",
-        when(col("user_id") % 5L === 0L, 1L).otherwise(0L))
-      .withColumn("world_number", lit(301L) + col("user_id") % 200L)
-      .withColumn("equip_ge_value", (col("event_id") * 9973L) % 1000000L)
+    enrich(df).withColumns(ListMap(
+      "g_amulet" -> slot(7907L, 23L),
+      "g_legs" -> slot(7901L, 29L),
+      "g_boots" -> slot(7883L, 31L),
+      "g_cape" -> slot(7879L, 37L),
+      "g_hands" -> slot(7873L, 41L),
+      "g_shield" -> slot(7867L, 43L),
+      "on_members_world" -> col("user_id") % 2L,
+      "on_pvp_world" -> when(col("user_id") % 5L === 0L, 1L).otherwise(0L),
+      "world_number" -> (lit(301L) + col("user_id") % 200L),
+      "equip_ge_value" -> (col("event_id") * 9973L) % 1000000L))
 
   private[operators] def enrichedFull(s: SparkSession, dir: String): DataFrame =
     enrichFull(Tables.events(s, dir))
@@ -391,9 +393,10 @@ object Star {
     */
   private[graft] def factProjection(df: DataFrame): DataFrame =
     enrichFull(df)
-      .withColumn("sighting_id", hashId(sightingCols))
-      .withColumn("location_id", hashId(locationCols))
-      .withColumn("gear_id", hashId(gearCols))
+      .withColumns(ListMap(
+        "sighting_id" -> hashId(sightingCols),
+        "location_id" -> hashId(locationCols),
+        "gear_id" -> hashId(gearCols)))
       .select(col("event_id"), col("sighting_id"), col("location_id"),
         col("gear_id"), col("ts").as("reported_at"),
         col("on_members_world"), col("on_pvp_world"), col("world_number"),

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -23,9 +25,9 @@ object ReportStream {
     * the raw parquet stream delivers.
     */
   def parsedEvents(raw: DataFrame): DataFrame =
-    graft.Tables.nanosToTimestamp(raw)
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .withColumn("manual_detect", col("event_id") % 2)
+    graft.Tables.nanosToTimestamp(raw).withColumns(ListMap(
+      "k" -> get_json_object(col("props"), "$.k").cast("long"),
+      "manual_detect" -> col("event_id") % 2))
 
   /** Kafka source for production (not runnable here: neither a broker
     * nor the spark-sql-kafka connector jar ships in this container —
@@ -130,19 +132,26 @@ object ReportStream {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persist: the batch feeds TWO sinks plus an emptiness probe —
+        // persist: the batch feeds one probe and up to two sink writes —
         // uncached, every action re-runs the source scan (and would
-        // triple-count the D18 observation); cached, the micro-batch
-        // materializes exactly once
+        // multi-count the D18 observation); cached, the micro-batch
+        // materializes exactly once, in the probe
         batch.persist()
         try {
-          val valid = batch.filter(col("event_type") =!= "error")
-          val dead = batch.filter(col("event_type") === "error")
-            .withColumn("reason", lit("bad_type"))
-          appendDedup(graft.operators.Star.factProjection(valid),
-            s"$outDir/fact_report", Seq("event_id"), tsCol = "reported_at")
-          if (!dead.isEmpty)
-            withRequeueJson(dead)
+          // one map-only job learns both what the fact sink's anti-join
+          // must read (the valid rows' months) and whether there are
+          // dead letters; a null event_type goes to neither sink
+          val seen = probe(batch.filter(col("event_type").isNotNull),
+            col("event_type") === "error", col("ts"))
+          val validMonths = seen.collect { case (false, m) => m }
+          if (validMonths.nonEmpty)
+            writeDeduped(graft.operators.Star.factProjection(
+                batch.filter(col("event_type") =!= "error")),
+              s"$outDir/fact_report", Seq("event_id"), "reported_at",
+              validMonths)
+          if (seen.exists(_._1))
+            withRequeueJson(batch.filter(col("event_type") === "error")
+                .withColumn("reason", lit("bad_type")))
               .write.mode("append").parquet(s"$outDir/dead_letter")
         } finally batch.unpersist()
         ()
@@ -160,14 +169,40 @@ object ReportStream {
     */
   private[graft] def withRequeueJson(dead: DataFrame): DataFrame = {
     val orig = dead.columns.toSeq
+    // toV2Json reads both new columns, so it is a second step
     graft.operators.Star.enrichFull(dead)
-      .withColumn("reporter_id", col("reporting_id"))
-      .withColumn("equipment", KafkaJson.equipmentStruct(
-        col("g_head"), col("g_amulet"), col("g_torso"), col("g_legs"),
-        col("g_boots"), col("g_cape"), col("g_hands"), col("g_weapon"),
-        col("g_shield")))
+      .withColumns(ListMap(
+        "reporter_id" -> col("reporting_id"),
+        "equipment" -> KafkaJson.equipmentStruct(
+          col("g_head"), col("g_amulet"), col("g_torso"), col("g_legs"),
+          col("g_boots"), col("g_cape"), col("g_hands"), col("g_weapon"),
+          col("g_shield"))))
       .withColumn("requeue_json", KafkaJson.toV2Json())
       .select((orig :+ "requeue_json").map(col): _*)
+  }
+
+  /** The sink's partition key of an instant: the epoch-month bucket
+    * floor(epoch / 30 d), a pure int64 function of the instant and so
+    * identical in every session timezone (date_format would shift rows
+    * across partition boundaries between differently-configured
+    * sessions and break the pruned anti-join). A null instant buckets
+    * to -1, so replayed null-ts rows still dedup instead of never
+    * matching the prune.
+    */
+  private def monthOf(ts: Column): Column =
+    coalesce(floor(unix_timestamp(ts) / (30L * 86400L)).cast("long"),
+      lit(-1L))
+
+  /** The distinct `(dead, monthOf(ts))` pairs of `df` in ONE map-only
+    * job: each task keeps its own partition's distinct pairs and the
+    * driver unions them — no shuffle, and on a cached micro-batch the
+    * same stage fills the cache.
+    */
+  private def probe(df: DataFrame, dead: Column,
+      ts: Column): Set[(Boolean, Long)] = {
+    import df.sparkSession.implicits._
+    df.select(dead, monthOf(ts)).as[(Boolean, Long)]
+      .mapPartitions(_.toSet.iterator).collect().toSet
   }
 
   /** D3: idempotent append — dedup within the batch AND against rows
@@ -176,53 +211,51 @@ object ReportStream {
     * (ref report.py:170-314). Makes an at-least-once source
     * effectively exactly-once at the sink.
     *
-    * The sink is partitioned by event month and the anti-join reads
-    * ONLY the months the incoming batch touches (partition-pruned
-    * scan): with a watermarked source a batch's event-time span is
-    * bounded, so the read side stays O(batch window), not O(sink
-    * history) — the r1 version broadcast the ENTIRE sink, which grows
-    * without bound. The key read carries the batch's own `key :+
-    * p_month` schema, so it never infers one from the sink's files
-    * (an inference job per batch) and an existing directory with no
+    * The sink is partitioned by event month ([[monthOf]]) and the
+    * anti-join reads ONLY the months the incoming batch touches
+    * (partition-pruned scan): with a watermarked source a batch's
+    * event-time span is bounded, so the read side stays O(batch
+    * window), not O(sink history) — the r1 version broadcast the
+    * ENTIRE sink, which grows without bound. The months come from one
+    * map-only probe over the batch BEFORE its in-batch dedup, so the
+    * deduped rows are computed once, by the write. That month set is
+    * a superset of the deduped rows' months: they differ only when
+    * one key arrives twice in a batch with instants in different
+    * months, and then the read covers both, so the dedup is at least
+    * as strict. The key read carries the batch's own `key :+ p_month`
+    * schema, so it never infers one from the sink's files (an
+    * inference job per batch) and an existing directory with no
     * committed parquet yet (a crashed first write) reads as empty.
     * Missing sink path is detected explicitly (FileSystem.exists); any
     * other read error fails the batch so the checkpoint retries it
     * instead of silently disabling dedup.
     */
   def appendDedup(batch: DataFrame, path: String, key: Seq[String],
-      tsCol: String = "ts"): Unit = {
+      tsCol: String = "ts"): Unit =
+    writeDeduped(batch, path, key, tsCol,
+      probe(batch, lit(false), col(tsCol)).map(_._2))
+
+  /** [[appendDedup]] with the batch's months already known. */
+  private def writeDeduped(batch: DataFrame, path: String, key: Seq[String],
+      tsCol: String, months: Set[Long]): Unit = {
     val spark = batch.sparkSession
     val part = "p_month"
-    // partition key = epoch-month bucket (floor(epoch/30d)): a pure
-    // int64 function of the instant — identical in every session
-    // timezone (date_format would shift rows across partition
-    // boundaries between differently-configured sessions and break
-    // the pruned anti-join); null ts buckets to -1 so replayed
-    // null-ts rows still dedup instead of never matching the prune.
     val deduped = batch.dropDuplicates(key)
-      .withColumn(part, coalesce(
-        floor(unix_timestamp(col(tsCol)) / (30L * 86400L)).cast("long"),
-        lit(-1L)))
-      .persist() // read twice: months collect + anti-join/write
-    try {
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh =
-        if (!fs.exists(hPath)) deduped
-        else {
-          // bounded: months touched by THIS batch (≤ watermark span)
-          val months = deduped.select(part).distinct()
-            .collect().map(_.getLong(0))
-          val existing = spark.read
-            .schema(deduped.select((key :+ part).map(col): _*).schema)
-            .parquet(path)
-            .filter(col(part).isin(months.toIndexedSeq: _*))
-            .select(key.map(col): _*)
-          // no forced broadcast: AQE sizes the pruned read at runtime
-          deduped.join(existing, key, "left_anti")
-        }
-      fresh.write.mode("append").partitionBy(part).parquet(path)
-    } finally { deduped.unpersist(); () }
+      .withColumn(part, monthOf(col(tsCol)))
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fresh =
+      if (!fs.exists(hPath)) deduped
+      else {
+        val existing = spark.read
+          .schema(deduped.select((key :+ part).map(col): _*).schema)
+          .parquet(path)
+          .filter(col(part).isin(months.toSeq: _*))
+          .select(key.map(col): _*)
+        // no forced broadcast: AQE sizes the pruned read at runtime
+        deduped.join(existing, key, "left_anti")
+      }
+    fresh.write.mode("append").partitionBy(part).parquet(path)
   }
 
   final case class Sighting(reportingId: Long, reportedId: Long,

@@ -106,6 +106,185 @@ class StreamingSpec extends SparkSpec {
     assert(dirs.nonEmpty && dirs.forall(_.startsWith("p_month=")))
   }
 
+  /** Writes events-raw-shaped `rows` as ONE parquet file `in/name`,
+    * so the file source reads it as one micro-batch.
+    */
+  private def stageFile(rows: org.apache.spark.sql.DataFrame, in: String,
+      name: String): Unit = {
+    val staging = tempDir("graft_stage")
+    rows.coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new java.io.File(staging).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, Paths.get(s"$in/$name"),
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** One `pipelineStar` drain of whatever `in` holds that `ck` has not
+    * committed yet.
+    */
+  private def drainPipe(in: String, out: String, ck: String)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = ReportStream.pipelineStar(
+      ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf)),
+      out, ck)
+    q.awaitTermination(120000)
+    q.stop()
+    q
+  }
+
+  /** Rows in a sink table; a sink never written reads as empty. */
+  private def sinkRows(path: String): Long =
+    if (new java.io.File(path).exists()) spark.read.parquet(path).count()
+    else 0L
+
+  test("pipe action budget: each micro-batch runs one probe and at most " +
+    "two writes, with no emptiness probe") {
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val in = tempDir("graft_budget_in")
+    val out = tempDir("graft_budget_out")
+    val ck = tempDir("graft_budget_ck")
+    // two files ⇒ two micro-batches (fileSource maxFilesPerTrigger=1);
+    // the second finds the sink written, so it also pays the anti-join
+    Seq("e1.parquet", "e2.parquet").foreach { f =>
+      Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(s"$in/$f"),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    // (micro-batches, action name, is a write) per Spark action:
+    // foreachBatch hands each micro-batch over as a LogicalRDD, so the
+    // RDD ids an action's plan reads name the micro-batch it ran for
+    val seen = scala.collection.mutable.ArrayBuffer
+      .empty[(Seq[Int], String, Boolean)]
+    def record(funcName: String, qe: QueryExecution): Unit = {
+      val batches = qe.analyzed.collect { case r: LogicalRDD => r.rdd.id }
+        .distinct
+      val write = qe.analyzed.isInstanceOf[DataWritingCommand]
+      seen.synchronized { seen += ((batches, funcName, write)) }
+    }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = record(funcName, qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = record(funcName, qe)
+    }
+    // the stream runs on a clone of the session, which copies the
+    // listener at start; unregistering right after keeps the count to
+    // the stream's own actions
+    spark.listenerManager.register(listener)
+    val q = try ReportStream.pipelineStar(
+      ReportStream.fileSource(spark, in, Tables.eventsRaw(spark, sf)), out, ck)
+    finally spark.listenerManager.unregister(listener)
+    q.awaitTermination(120000)
+    q.stop()
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+
+    val acts = seen.synchronized(seen.toList)
+    assert(acts.forall(_._1.size == 1),
+      s"every action must read exactly one micro-batch: $acts")
+    val byBatch = acts.groupBy(_._1.head)
+    assert(byBatch.size === 2, s"expected two micro-batches: $acts")
+    byBatch.foreach { case (rdd, as) =>
+      val (writes, others) = as.partition(_._3)
+      assert(others.map(_._2) === List("collect"),
+        s"batch rdd $rdd: one probe is the only non-write action, ran $as")
+      assert(writes.size <= 2, s"batch rdd $rdd: at most two writes, ran $as")
+    }
+    assert(!acts.exists(_._2 == "isEmpty"))
+    assert(sinkRows(s"$out/fact_report") ===
+      Tables.events(spark, sf).filter(col("event_type") =!= "error").count())
+  }
+
+  test("pipe probe: a micro-batch of only error rows writes zero facts " +
+    "and every row as a dead letter") {
+    val in = tempDir("graft_allerr_in")
+    val out = tempDir("graft_allerr_out")
+    val ck = tempDir("graft_allerr_ck")
+    val errors = Tables.eventsRaw(spark, sf)
+      .filter(col("event_type") === "error")
+    val nErr = errors.count()
+    assert(nErr > 0)
+    stageFile(errors, in, "errors.parquet")
+    drainPipe(in, out, ck)
+    assert(sinkRows(s"$out/fact_report") === 0L)
+    assert(sinkRows(s"$out/dead_letter") === nErr)
+  }
+
+  test("pipe probe: a micro-batch with no error rows writes no dead " +
+    "letters") {
+    val in = tempDir("graft_noerr_in")
+    val out = tempDir("graft_noerr_out")
+    val ck = tempDir("graft_noerr_ck")
+    val valid = Tables.eventsRaw(spark, sf)
+      .filter(col("event_type") =!= "error")
+    stageFile(valid, in, "valid.parquet")
+    drainPipe(in, out, ck)
+    assert(sinkRows(s"$out/fact_report") === valid.count())
+    assert(sinkRows(s"$out/dead_letter") === 0L)
+  }
+
+  test("pipe probe: rows with a null event_type reach neither sink") {
+    val in = tempDir("graft_nulltype_in")
+    val out = tempDir("graft_nulltype_out")
+    val ck = tempDir("graft_nulltype_ck")
+    // every 7th event loses its type, errors included
+    val raw = Tables.eventsRaw(spark, sf).withColumn("event_type",
+      when(col("event_id") % 7 === 0, lit(null).cast("string"))
+        .otherwise(col("event_type")))
+    val nulls = raw.filter(col("event_type").isNull)
+    assert(nulls.count() > 0)
+    stageFile(raw, in, "mixed.parquet")
+    drainPipe(in, out, ck)
+    val facts = spark.read.parquet(s"$out/fact_report")
+    val dead = spark.read.parquet(s"$out/dead_letter")
+    assert(facts.count() === raw.filter(col("event_type") =!= "error").count())
+    assert(dead.count() === raw.filter(col("event_type") === "error").count())
+    assert(facts.join(nulls, Seq("event_id"), "left_semi").count() === 0)
+    assert(dead.join(nulls, Seq("event_id"), "left_semi").count() === 0)
+  }
+
+  test("pipe probe: an event_id already in the sink under month A is " +
+    "deduped when re-sent in a batch whose valid rows span months A and B") {
+    val in = tempDir("graft_months_in")
+    val out = tempDir("graft_months_out")
+    val ck = tempDir("graft_months_ck")
+    // two adjacent sink months (30-day epoch buckets), in the raw ts
+    // type the source declares (nanos as long, or a timestamp)
+    val monthA = 660L
+    val raw = Tables.eventsRaw(spark, sf)
+    def tsIn(month: Long) = {
+      val secs = month * 30L * 86400L + 3600L
+      raw.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType => lit(secs * 1000000000L)
+        case t => timestamp_seconds(lit(secs)).cast(t)
+      }
+    }
+    val valid = raw
+      .filter(col("event_type") =!= "error").orderBy("event_id").limit(40)
+      .cache()
+    val ids = valid.select("event_id").collect().map(_.getLong(0))
+    val (first, second) = (ids.take(20), ids.drop(20))
+    stageFile(valid.filter(col("event_id").isin(first.toSeq: _*))
+      .withColumn("ts", tsIn(monthA)), in, "b0.parquet")
+    drainPipe(in, out, ck)
+    // batch 1: event x again, once stamped in A and once in B (so the
+    // in-batch dedup may keep either copy), beside fresh rows in B
+    val x = first.head
+    val resent = valid.filter(col("event_id") === x)
+    stageFile(resent.withColumn("ts", tsIn(monthA))
+      .unionByName(resent.withColumn("ts", tsIn(monthA + 1)))
+      .unionByName(valid.filter(col("event_id").isin(second.toSeq: _*))
+        .withColumn("ts", tsIn(monthA + 1))), in, "b1.parquet")
+    drainPipe(in, out, ck)
+    val facts = spark.read.parquet(s"$out/fact_report")
+    assert(facts.count() === 40L)
+    assert(facts.filter(col("event_id") === x).count() === 1L,
+      "the re-sent event must be deduped against the sink's month A")
+    assert(facts.filter(col("event_id") === x)
+      .select(col("p_month").cast("long")).head().getLong(0) === monthA)
+    valid.unpersist()
+  }
+
   test("D5 stateful dedup: each sighting key emitted exactly once") {
     import spark.implicits._
     val in = tempDir("graft_state_in")
