@@ -6,10 +6,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Central registry for COMPILED ARTIFACTS — the per-(session, corpus)
-  * handles an engine deployment would materialize as lake tables or
-  * shipped index files: the dup-cluster map, the standing LSH band
-  * index and its gram-array verify relation, the quantizer-cell
-  * assignment, the winnowed fingerprint index, the IVF codebook.
+  * handles of the dup-cluster map, the standing LSH band index and
+  * its gram-array verify relation, the quantizer-cell assignment, the
+  * winnowed fingerprint index, the IVF codebook. Behind a handle,
+  * [[graft.sources.ArtifactStore]] keeps the artifact across sessions:
+  * a relation as plain parquet, a driver-side value as one serialized
+  * file.
   *
   * Lifetime contract (every artifact cache in the engine routes
   * through here):
@@ -106,9 +108,9 @@ object Artifacts {
   // Build telemetry (r12 verdict item 2/4): an append-only event log
   // of every artifact materialization — family, corpus, wall millis,
   // and kind ("build" = in-memory only, "build_persist" = built and
-  // committed to the lake, "lake_load" = served from the lake with
-  // zero rebuild). Bench diffs the log around each timed query and
-  // records which queries paid which builds.
+  // claimed in the artifact store, "lake_load" = served from the
+  // store with zero rebuild). Bench diffs the log around each timed
+  // query and records which queries paid which builds.
   // ------------------------------------------------------------------
 
   /** One artifact materialization. `nested` = this event fired

@@ -1258,19 +1258,7 @@ object Analytics {
         "analytics.histBounds", dir)(
         histProfile(s, dir).map { case (name, df, v) =>
           name -> trainBounds(df, v, s"percentile(v, array($octiles))")
-        }.toMap) { v =>
-        // empty bound arrays round-trip via a pos=-1 marker row
-        val sp = s; import sp.implicits._
-        v.toSeq.flatMap { case (n, arr) =>
-          if (arr.isEmpty) Seq((n, -1, 0L))
-          else arr.zipWithIndex.map { case (b, i) => (n, i, b) }
-        }.toDF("name", "pos", "bound")
-      } { df =>
-        df.collect()
-          .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-          .groupBy(_._1).map { case (n, rows) =>
-            n -> rows.filter(_._2 >= 0).sortBy(_._2).map(_._3).toArray }
-      })
+        }.toMap))
 
   /** The histogram relation under a trained bounds map — shared by
     * the oracle-gated exact form and the approx scale twin.

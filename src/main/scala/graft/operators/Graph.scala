@@ -51,7 +51,7 @@ object Graph {
   def reportEdges(s: SparkSession, dir: String): DataFrame =
     edgeCache.getOrElseUpdate(s, dir)(
       // compactScan (r21): every graph query re-joins this relation
-      // per round, and the 16-way artifact read costs 16 tiny tasks
+      // per round, and the artifact read costs one tiny task per file
       // per scan — merge the splits once at handle creation
       Par.compactScan(
         graft.sources.ArtifactStore.materialize(s, "graph.edges", dir)(

@@ -95,20 +95,20 @@ private[graft] object Par {
     */
   val ScanRowsPerSlice: Long = 262144L
 
-  /** Size-adaptive NO-SHUFFLE compaction of a small scan (r21): lake
-    * artifact tables are written 16-way bucketed so writes
-    * parallelize, and Spark's split packing assigns each tiny file its
+  /** Size-adaptive NO-SHUFFLE compaction of a small scan (r21): a
+    * stored artifact keeps its build's partitioning, one file per
+    * build task, and Spark's split packing assigns each tiny file its
     * own task (maxSplitBytes degenerates to openCostInBytes when the
     * byte mass is small) — so every read of a KB-sized artifact costs
-    * ~16 tasks × ~100 ms fixed, and the iterative families re-scan
-    * per round. `coalesce` to ⌈rows / ScanRowsPerSlice⌉ merges those
-    * file splits without an exchange; a big artifact keeps (or
-    * exceeds-and-keeps) its natural width — coalesce can only narrow,
-    * so at scale this is a no-op by construction. Row-count based
-    * (one cheap count job per HANDLE creation — footer-only on plain
-    * parquet): the first cut used plan-estimated BYTES and
-    * single-tasked a 2.7 MB artifact that decompressed to ~3M edges
-    * of per-round derivation work at sf1.
+    * one task × ~100 ms fixed per file, and the iterative families
+    * re-scan per round. `coalesce` to ⌈rows / ScanRowsPerSlice⌉
+    * merges those file splits without an exchange; a big artifact
+    * keeps (or exceeds-and-keeps) its natural width — coalesce can
+    * only narrow, so at scale this is a no-op by construction.
+    * Row-count based (one cheap count job per HANDLE creation —
+    * footer-only on plain parquet): the first cut used plan-estimated
+    * BYTES and single-tasked a 2.7 MB artifact that decompressed to
+    * ~3M edges of per-round derivation work at sf1.
     */
   def compactScan(df: DataFrame): DataFrame =
     df.coalesce(roundWidth(df.count(), ScanRowsPerSlice))

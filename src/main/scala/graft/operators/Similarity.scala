@@ -425,31 +425,22 @@ object Similarity {
   private val codebookCache =
     graft.Artifacts.cache[Array[(Long, Array[Long])]]("similarity.ivfCodebook")
 
-  /** Train the IVF codebook: the G6 aggregation, collected to the
-    * driver as (label, centroid-micro-vector) pairs. k·dim longs
-    * whatever the corpus size — the train-then-ship half of IVF.
-    */
-  /** Codebook ↔ DataFrame round-trip for the lake-resident trained
-    * model: the canonical order is by cell id (both trainers already
-    * sort), so a fresh session re-collects bit-identical state.
-    */
+  /** A codebook as a (cell, centroid) relation, for joins. */
   private def codebookToDf(s: SparkSession)(
       v: Array[(Long, Array[Long])]): DataFrame = {
     val sp = s; import sp.implicits._
     v.toSeq.toDF("cell", "centroid")
   }
 
-  private def codebookFromDf(df: DataFrame): Array[(Long, Array[Long])] =
-    df.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-      .sortBy(_._1)
-
+  /** Train the IVF codebook: the G6 aggregation, collected to the
+    * driver as (label, centroid-micro-vector) pairs. k·dim longs
+    * whatever the corpus size — the train-then-ship half of IVF.
+    */
   private[graft] def ivfCodebook(s: SparkSession, dir: String)
       : Array[(Long, Array[Long])] =
     codebookCache.getOrElseUpdate(s, dir)(
       graft.sources.ArtifactStore.materializeValue(s,
-        "similarity.ivfCodebook", dir)(trainCodebook(s, dir))(
-        codebookToDf(s))(codebookFromDf))
+        "similarity.ivfCodebook", dir)(trainCodebook(s, dir)))
 
   /** The IVF cell assignment as a map-only per-row expression over
     * `embedding` under a FIXED trained codebook — what index
@@ -866,15 +857,6 @@ object Similarity {
           .collect()
         (rows.map(_.getLong(1)),
           rows.map(r => r.getLong(2) - r.getLong(1)))
-      } { v =>
-        val sp = s; import sp.implicits._
-        v._1.indices.map(i => (i, v._1(i), v._2(i))).toDF(
-          "pos", "mn", "span")
-      } { df =>
-        val rows = df.collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1)
-        (rows.map(_._2), rows.map(_._3))
       })
 
   /** Exact non-negative floor division as a codegen-friendly Column. */
@@ -1489,7 +1471,7 @@ object Similarity {
         var cents = kmeansInit(s, dir)
         for (_ <- 1 to KmeansRounds) cents = kmeansRound(s, dir, cents)
         cents
-      }(codebookToDf(s))(codebookFromDf))
+      })
 
   val sAnnIvfKm: Q = Q(
     (s, dir) => {
@@ -1626,10 +1608,11 @@ object Similarity {
     * ≥ 1−(1−1/⌈n/cap⌉)^R and the join stays ≤ R·n·cap per cell —
     * linear in corpus size. The PRIMARY dial is still codebook size
     * (k ≈ corpus/target_width keeps cells within-cap and the graph
-    * exact — the AnnSweep evidence); the split is the skew guard for
-    * the hot cells any real embedding distribution has. Exact kernel
-    * on candidates, per-vector (score DESC, id) row_number keeps k —
-    * the E26 heap's plan at scale. All-integer ⇒ oracle-gated.
+    * exact — the round-14 ANN sweep in BASELINE.md); the split is the
+    * skew guard for the hot cells any real embedding distribution
+    * has. Exact kernel on candidates, per-vector (score DESC, id)
+    * row_number keeps k — the E26 heap's plan at scale. All-integer ⇒
+    * oracle-gated.
     */
   val KnnGraphK = 3
   val MaxKnnCell = 256
@@ -1730,7 +1713,7 @@ object Similarity {
         var cents = kmeansInit(s, dir, k)
         for (_ <- 1 to KmeansRounds) cents = kmeansRound(s, dir, cents)
         cents
-      }(codebookToDf(s))(codebookFromDf)
+      }
     }
 
   // ---------------------------------------------- two-level (r19/r20)
@@ -1879,23 +1862,6 @@ object Similarity {
         r.getSeq[org.apache.spark.sql.Row](1).map(_.getLong(1)).toArray))
       .sortBy(_._1)
 
-  private def twoLevelToDf(s: SparkSession)(
-      v: (Array[(Long, Array[Long])], Array[(Long, Array[Long])]))
-      : DataFrame = {
-    val sp = s; import sp.implicits._
-    (v._1.toSeq.map { case (c, a) => (1, c, a.toSeq) } ++
-      v._2.toSeq.map { case (c, a) => (2, c, a.toSeq) })
-      .toDF("level", "cell", "centroid")
-  }
-
-  private def twoLevelFromDf(df: DataFrame)
-      : (Array[(Long, Array[Long])], Array[(Long, Array[Long])]) = {
-    val rows = df.collect().map(r => (r.getInt(0), r.getLong(1),
-      r.getSeq[Long](2).toArray))
-    (rows.filter(_._1 == 1).map(r => (r._2, r._3)).sortBy(_._1),
-      rows.filter(_._1 == 2).map(r => (r._2, r._3)).sortBy(_._1))
-  }
-
   private val knnCodebook2Cache =
     graft.Artifacts
       .cache[(Array[(Long, Array[Long])], Array[(Long, Array[Long])])](
@@ -1953,7 +1919,7 @@ object Similarity {
           c2 = kmeansRoundLocal(s, res, c2, k2)
         res.unpersist(blocking = false)
         (c1, c2)
-      }(twoLevelToDf(s))(twoLevelFromDf)
+      }
     }
 
   /** `df` + an exploded `cell` column: the row's `a` assigned graph-
@@ -2293,7 +2259,7 @@ object Similarity {
   private[graft] def knnGraphIndex(s: SparkSession, dir: String): DataFrame =
     knnGraphCache.getOrElseUpdate(s, dir)(
       // compactScan (r21): the walk re-joins this handle per round —
-      // merge the 16-way artifact file splits once, shuffle-free
+      // merge the artifact's file splits once, shuffle-free
       Par.compactScan(
         graft.sources.ArtifactStore.materialize(s, "similarity.knnGraph",
           dir) {

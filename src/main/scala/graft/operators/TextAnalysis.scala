@@ -1002,10 +1002,9 @@ object TextAnalysis {
     * on the standing corpus (or a carve), materializes the count
     * relations, and scores every ARRIVING batch as a pure function of
     * (doc, model) — no retrain, no corpus re-scan, zero stream state.
-    * Returns (bigram counts, first-token counts, corpus mean) —
-    * the count relations eagerly checkpointed (the band-index
-    * stance), the mean one scalar. Transitions unseen by the model
-    * contribute 0 bp (the honest OOV-transition convention;
+    * Returns (bigram counts, first-token counts, corpus mean) — two
+    * stored relations and one stored scalar. Transitions unseen by the
+    * model contribute 0 bp (the honest OOV-transition convention;
     * impossible when scoring the training corpus itself, which is
     * what the equivalence spec pins).
     */
@@ -1014,37 +1013,19 @@ object TextAnalysis {
 
   private[graft] def lmModel(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, Long) =
-    lmModelCache.getOrElseUpdate(s, dir)(
-      graft.sources.ArtifactStore.materializeValue(s, "text.lmModel",
-        dir) {
-        val big = lmBigrams(lmTokens(Tables.documents(s, dir)))
-        val c2 = big.groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-          .localCheckpoint(true)
-        val c1 = big.groupBy("a").agg(count(lit(1)).as("n_a"))
-          .localCheckpoint(true)
-        val mean = lmScoreRaw(Tables.documents(s, dir), c2, c1)
+    lmModelCache.getOrElseUpdate(s, dir) {
+      val store = graft.sources.ArtifactStore
+      lazy val big = lmBigrams(lmTokens(Tables.documents(s, dir)))
+      val c2 = store.materialize(s, "text.lmModel.c2", dir)(
+        big.groupBy("a", "b").agg(count(lit(1)).as("n_ab")))
+      val c1 = store.materialize(s, "text.lmModel.c1", dir)(
+        big.groupBy("a").agg(count(lit(1)).as("n_a")))
+      val mean = store.materializeValue(s, "text.lmModel.mean", dir)(
+        lmScoreRaw(Tables.documents(s, dir), c2, c1)
           .filter(col("n_bigrams") > 0)
-          .agg(expr("sum(lm_bp) DIV count(*)")).head().getLong(0)
-        (c2, c1, mean)
-      } { case (c2, c1, mean) =>
-        // one relation, kind-tagged: "2" bigram counts, "1" unigram
-        // counts, "m" the corpus-mean scalar
-        c2.select(lit("2").as("kind"), col("a"), col("b"),
-            col("n_ab").as("n"))
-          .unionAll(c1.select(lit("1").as("kind"), col("a"),
-            lit(null).cast("string").as("b"), col("n_a").as("n")))
-          .unionAll(c2.sparkSession.range(1).select(
-            lit("m").as("kind"), lit(null).cast("string").as("a"),
-            lit(null).cast("string").as("b"), lit(mean).as("n")))
-      } { df =>
-        val c2 = df.filter(col("kind") === "2")
-          .select(col("a"), col("b"), col("n").as("n_ab"))
-        val c1 = df.filter(col("kind") === "1")
-          .select(col("a"), col("n").as("n_a"))
-        val mean = df.filter(col("kind") === "m")
-          .select("n").head().getLong(0)
-        (c2, c1, mean)
-      })
+          .agg(expr("sum(lm_bp) DIV count(*)")).head().getLong(0))
+      (c2, c1, mean)
+    }
 
   private[graft] def lmScoreRaw(docs: DataFrame, c2: DataFrame,
       c1: DataFrame): DataFrame = {
@@ -1208,11 +1189,6 @@ object TextAnalysis {
             expr("sum(dl) DIV count(*)").cast("long").as("avgdl"))
           .head()
         (r.getLong(0), r.getLong(1))
-      } { v =>
-        val sp = s; import sp.implicits._
-        Seq(v).toDF("n_docs", "avgdl")
-      } { df =>
-        val r = df.head(); (r.getLong(0), r.getLong(1))
       })
 
   // ---------------------------------------------------------------- H22
@@ -1492,17 +1468,7 @@ object TextAnalysis {
       graft.sources.ArtifactStore.materializeValue(s, "text.bpeMerges",
         dir)(
         bpeTrainScalable(Tables.documents(s, dir), BpeRounds)
-          .map(t => (t._2, t._3)).toArray) { v =>
-        // merges are PRIORITY-ORDERED: persist the rank so a fresh
-        // session replays them in the exact learned order
-        val sp = s; import sp.implicits._
-        v.toSeq.zipWithIndex
-          .map { case ((l, r), i) => (i, l, r) }
-          .toDF("rank", "lhs", "rhs")
-      } { df =>
-        df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))
-          .sortBy(_._1).map(t => (t._2, t._3))
-      })
+          .map(t => (t._2, t._3)).toArray))
 
   /** BPE ENCODE — the consumer half of [[tBpe]], and what a tokenizer
     * actually does at ingest: apply the learned merges, in priority

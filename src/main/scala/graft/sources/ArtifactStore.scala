@@ -1,10 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.io.{ObjectInputFilter, ObjectInputStream, ObjectOutputStream}
 
-/** Lake-resident persistence for the engine's standing artifacts —
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.json4s.{DefaultFormats, Formats, JValue}
+import org.json4s.jackson.{JsonMethods, Serialization}
+
+/** Durable persistence for the engine's standing artifacts —
   * the build-once relations and trained models the scaladocs across
   * Dedup/Similarity/TextAnalysis all describe as "a lake table in
   * production": the dup-cluster map, the LSH band index and its gram
@@ -15,11 +19,11 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint` handles — fast, but explicitly NOT
   * fault-tolerant (one lost executor kills the handle mid-session and
   * every consumer after it fails) and gone at session end, so every
-  * new session re-paid the build. This store closes both gaps by
-  * dogfooding the engine's own lakehouse ([[LakeMerge]]): a build is
-  * an explicit, atomic lake commit; a read is a plain parquet-backed
-  * scan that survives executor loss like any other table; a FRESH
-  * session (or a second driver process on the same storage) reads the
+  * new session re-paid the build. This store closes both gaps with
+  * one write per artifact: a relation is plain parquet (a read is a
+  * parquet scan that survives executor loss like any other table), a
+  * driver-side value is one Java-serialized file, and a FRESH session
+  * (or a second driver process on the same storage) reads the
   * artifact with zero rebuild.
   *
   * Addressing & staleness — the table path IS the cache key:
@@ -33,14 +37,14 @@ import org.apache.spark.sql.functions._
   * plain directories under the root, reclaimed by deleting the root
   * (a deployment would age them out like any cache volume).
   *
-  * Storage shape: the artifact relation is wrapped with a synthetic
-  * 128-bit row key (`_akey` = md5 of the row's JSON) and a 16-way
-  * bucket partition (`_adt` = first hex nibble of the key) so writes
-  * and reads parallelize instead of funneling through one task, then
-  * committed via [[LakeMerge.init]]. Artifact relations are treated
-  * as SETS: byte-identical duplicate rows collapse under the (dt,
-  * key) dedup — every artifact in the engine is a distinct-row index
-  * or model, so this is a no-op in practice.
+  * Storage shape: an address holds the data files the build wrote,
+  * with the build's own partitioning, and `_manifest/v0.json` naming
+  * them ([[Manifest]]). A relation is read back with the manifest's
+  * schema, so serving it runs no Spark job; a value is read by the
+  * driver alone, through an allowlist of the classes values are made
+  * of ([[ValueFilter]]). Artifact relations keep the rows the build
+  * produced: every build in the engine is already a distinct-row
+  * index or model.
   *
   * One claim protocol ([[claim]]) serves all three entry points: a
   * build lands in a `.build-*` sibling of its address and one rename
@@ -155,7 +159,7 @@ object ArtifactStore {
       md5hex(corpusDir + "|" + buf.mkString("|"))
     })
 
-  /** The lake table directory addressing (family, corpus, code). */
+  /** The directory addressing (family, corpus, code). */
   private[graft] def tableDir(spark: SparkSession, family: String,
       corpusDir: String): String =
     s"$configuredRoot/$family/" +
@@ -171,10 +175,10 @@ object ArtifactStore {
   private val saveCounts =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  /** Times this JVM served `family` from the lake with zero rebuild. */
+  /** Times this JVM served `family` from the store with zero rebuild. */
   def loads(family: String): Int = loadCounts.getOrElse(family, 0)
 
-  /** Times this JVM built `family` and committed it to the lake. */
+  /** Times this JVM built `family` and claimed it in the store. */
   def saves(family: String): Int = saveCounts.getOrElse(family, 0)
 
   private def bump(m: scala.collection.concurrent.TrieMap[String, Int],
@@ -185,24 +189,86 @@ object ArtifactStore {
   // Materialization
   // ------------------------------------------------------------------
 
-  private val MetaCols = Seq("_adt", "_akey", "_aseq")
+  private implicit val formats: Formats = DefaultFormats
 
-  private def wrap(df: DataFrame): DataFrame = {
-    val key = md5(to_json(struct(df.columns.map(col): _*)))
-    df.withColumn("_akey", key)
-      .withColumn("_adt", substring(col("_akey"), 1, 1))
-      .withColumn("_aseq", lit(0L))
-  }
+  /** The v0 manifest of a relation or value artifact: the data files
+    * the build wrote (names under the address), the relation's schema
+    * (None for a value) and the claim stamp [[vacuum]] ages it by.
+    * [[materializeDir]] addresses hold a lake table's own manifest at
+    * the same path instead.
+    */
+  private final case class Manifest(files: List[String],
+      schemaDdl: Option[String], committedAtMs: Long)
 
-  private def unwrap(df: DataFrame): DataFrame =
-    df.drop(MetaCols: _*)
-
-  /** Commit `df` as the single-snapshot artifact table at `dir`. */
-  private def commit(s: SparkSession, dir: String, df: DataFrame): Unit =
-    LakeMerge.init(s, dir, wrap(df), "_adt", "_akey", "_aseq")
+  private def manifestPath(dir: String): Path =
+    new Path(s"$dir/_manifest/v0.json")
 
   private def exists(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(s"$dir/_manifest/v0.json"))
+    fs(spark, dir).exists(manifestPath(dir))
+
+  private def readV0(s: SparkSession, dir: String): JValue = {
+    val in = fs(s, dir).open(manifestPath(dir))
+    try JsonMethods.parse(new String(in.readAllBytes(), "UTF-8"))
+    finally in.close()
+  }
+
+  /** Finish a build in `tmp`: name every data file it wrote. */
+  private def writeManifest(s: SparkSession, tmp: String,
+      schema: Option[StructType]): Unit = {
+    val f = fs(s, tmp)
+    val files = f.listStatus(new Path(tmp)).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+    val out = f.create(manifestPath(tmp), false)
+    try out.write(Serialization.write(Manifest(files.toList,
+      schema.map(_.toDDL), System.currentTimeMillis)).getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  private val ValueFile = "value.ser"
+  private val MaxValueBytes = 1L << 30
+
+  /** The classes a value artifact may name: boxed primitives, strings,
+    * Scala tuples (and their specialized subclasses) and the forms an
+    * immutable Map serializes as (the small maps, and the proxy a
+    * HashMap writes), plus arrays of any of them or of primitives.
+    * Every other class is refused before an instance exists, so a
+    * planted file can run none of its code; depth, array length and
+    * stream size are capped.
+    */
+  private val ValueClass = ("""java\.lang\.(Number|Long|Integer|Double|""" +
+    """Boolean|String)|scala\.Tuple\d+(\$mc\w+\$sp)?|""" +
+    """scala\.collection\.immutable\.(Map\$(Map\d|EmptyMap\$)|HashMap\$?)|""" +
+    """scala\.collection\.(generic\.DefaultSerializationProxy|""" +
+    """MapFactory\$ToFactory)|scala\.runtime\.ModuleSerializationProxy""").r
+
+  private val ValueFilter: ObjectInputFilter = { info =>
+    var c = info.serialClass()
+    while (c != null && c.isArray) c = c.getComponentType
+    val ok = info.depth() <= 8 && info.streamBytes() <= MaxValueBytes &&
+      info.arrayLength() <= (MaxValueBytes >> 3) &&
+      (c == null || c.isPrimitive || ValueClass.matches(c.getName))
+    if (ok) ObjectInputFilter.Status.ALLOWED
+    else ObjectInputFilter.Status.REJECTED
+  }
+
+  private def writeValue(s: SparkSession, tmp: String, v: Any): Unit = {
+    val out = fs(s, tmp).create(new Path(tmp, ValueFile), false)
+    try {
+      val oos = new ObjectOutputStream(out)
+      oos.writeObject(v)
+      oos.flush()
+    } finally out.close()
+    writeManifest(s, tmp, None)
+  }
+
+  private def readValue(s: SparkSession, dir: String): Any = {
+    val in = fs(s, dir).open(new Path(dir, ValueFile))
+    try {
+      val ois = new ObjectInputStream(in)
+      ois.setObjectInputFilter(ValueFilter)
+      ois.readObject()
+    } finally in.close()
+  }
 
   /** Create the artifact root before the first persist. When the
     * root is the tmpdir DEFAULT (env unset, no spec override) it is
@@ -227,39 +293,53 @@ object ArtifactStore {
   }
 
   /** True ONLY for the corruption signatures quarantine exists for:
-    * the v0 manifest is unparseable, or a data file v0 references is
-    * gone (a partial external vacuum, a torn copy). Everything else a
+    * the v0 manifest is unparseable, or a data file it names is gone
+    * (a partial external vacuum, a torn copy). Everything else a
     * load can throw — permission blip, transient FS error, concurrent
     * maintenance mid-listing — returns false: a committed SHARED
-    * table other live sessions are reading must never be destroyed
-    * over a failure that may not be the table's fault.
+    * artifact other live sessions are reading must never be destroyed
+    * over a failure that may not be the artifact's fault.
     */
   private def isCorrupt(s: SparkSession, dir: String): Boolean =
     try {
-      val m = LakeMerge.manifest(s, dir, Some(0))
-      val f = fs(s, dir)
-      m.partitions.exists { e =>
-        val base =
-          if (e.dir.startsWith("/")) e.dir else s"$dir/${e.dir}"
-        e.files.exists(fn =>
-          !f.exists(new Path(s"$base/${m.dtCol}=${e.dt}/$fn")))
+      val v0 = readV0(s, dir)
+      val names = (v0 \ "files").extractOpt[List[String]] match {
+        case Some(files) => files.map(new Path(dir, _))
+        case None => // a lake table: its partitions name the files
+          val m = v0.extract[LakeMerge.Manifest]
+          m.partitions.flatMap { e =>
+            val base = if (e.dir.startsWith("/")) e.dir else s"$dir/${e.dir}"
+            e.files.map(fn => new Path(s"$base/${m.dtCol}=${e.dt}/$fn"))
+          }
       }
+      val f = fs(s, dir)
+      names.exists(!f.exists(_))
     } catch {
-      case _: com.fasterxml.jackson.core.JacksonException => true
-      case _: org.json4s.MappingException => true
-      // bytes contradict their checksum — definitive torn content,
-      // not a blip (Hadoop checksummed FS surfaces manifest
-      // corruption this way before JSON parsing ever sees it)
-      case _: org.apache.hadoop.fs.ChecksumException => true
+      case e: Exception if corruption(e) => true
       case scala.util.control.NonFatal(_) => false // transient: keep it
     }
+
+  /** The failures that prove an artifact can never be read: an
+    * unparseable manifest, bytes that contradict their checksum (how
+    * Hadoop's checksummed FS surfaces torn content before a parser
+    * sees it), and a value file that is torn or names a class outside
+    * [[ValueFilter]].
+    */
+  private def corruption(e: Exception): Boolean = e match {
+    case _: com.fasterxml.jackson.core.JacksonException |
+         _: org.json4s.MappingException |
+         _: org.apache.hadoop.fs.ChecksumException |
+         _: java.io.ObjectStreamException | _: java.io.EOFException |
+         _: ClassNotFoundException => true
+    case _ => false
+  }
 
   /** Quarantine a CORRUPT committed dir by renaming it aside
     * (tombstone), never recursive-delete: a rename never deletes
     * files a concurrent reader of the address still holds, keeps the
-    * bytes for post-mortem, and the tombstone (still a committed
-    * single-snapshot table under the family dir) ages out through the
-    * normal [[vacuum]] retention by its own v0 commit stamp.
+    * bytes for post-mortem, and the tombstone (still a dir with a
+    * stamped v0 manifest under the family dir) ages out through the
+    * normal [[vacuum]] retention by that stamp.
     * Best-effort: if the rename fails the corrupt dir keeps the
     * address and the rebuild's claim loses to it.
     */
@@ -272,17 +352,18 @@ object ArtifactStore {
 
   /** The one claim protocol behind all three entry points. A standing
     * dir at the address is served unless it is verifiably corrupt
-    * ([[isCorrupt]]), in which case it is tombstoned aside
-    * ([[quarantine]]) and rebuilt. A build lands in a sibling
-    * `.build-*` dir and ONE rename claims the address; the loser of a
-    * race deletes its own bytes and serves the winner's
-    * (rename-into-existing fails on every relevant FS). `serve` turns
-    * the claimed address into the artifact and gets the build's
-    * result when this call built it. If build-and-claim throws (an
-    * unusable root, a failed rename, a failed build) the event is
-    * recorded as `build` and the session-local form `local` is served
-    * instead; `local` runs the build again, so a real build failure
-    * still surfaces. With persistence off `local` is all there is.
+    * ([[isCorrupt]] before serving, [[corruption]] while serving), in
+    * which case it is tombstoned aside ([[quarantine]]) and rebuilt.
+    * A build lands in a sibling `.build-*` dir and ONE rename claims
+    * the address; the loser of a race deletes its own bytes and
+    * serves the winner's (rename-into-existing fails on every
+    * relevant FS). `serve` turns the claimed address into the
+    * artifact and gets the build's result when this call built it.
+    * If build-and-claim throws (an unusable root, a failed rename, a
+    * failed build) the event is recorded as `build` and the
+    * session-local form `local` is served instead; `local` runs the
+    * build again, so a real build failure still surfaces. With
+    * persistence off `local` is all there is.
     */
   private def claim[B, T](s: SparkSession, family: String,
       corpusDir: String)(build: String => B)(
@@ -294,14 +375,17 @@ object ArtifactStore {
         (System.nanoTime() - t0) / 1000000, kind)
     if (!enabled) return scoped(local)
     val dir = tableDir(s, family, corpusDir)
-    val standing = exists(s, dir) &&
-      (!isCorrupt(s, dir) || { quarantine(s, dir); false })
     val t0 = System.nanoTime()
-    if (standing) {
-      val out = serve(dir, None)
+    val standing =
+      if (!exists(s, dir)) None
+      else if (isCorrupt(s, dir)) { quarantine(s, dir); None }
+      else try Some(serve(dir, None)) catch {
+        case e: Exception if corruption(e) => quarantine(s, dir); None
+      }
+    if (standing.nonEmpty) {
       bump(loadCounts, family)
       record(t0, "lake_load")
-      out
+      standing.get
     } else try {
       ensureRoot(s)
       val f = fs(s, dir)
@@ -348,21 +432,28 @@ object ArtifactStore {
     }
   }
 
-  /** Lake-else-build-and-commit for a DataFrame artifact: the build
-    * is committed as a LakeMerge v0 table and claimed by [[claim]].
-    * The returned relation is parquet-backed (fault-tolerant, shared
-    * across sessions); with persistence off, or when build-and-claim
-    * fails, it is the eager localCheckpoint handle. An EMPTY build
-    * result persists like any other (zero-partition snapshots read
-    * back as an empty relation with the recorded schema).
+  /** Stored-else-build-and-write for a DataFrame artifact: the build
+    * is written as plain parquet with its own partitioning, named by
+    * the manifest and claimed by [[claim]]. The returned relation is
+    * a parquet scan under the manifest's schema (fault-tolerant,
+    * shared across sessions, no Spark job until the consumer's own
+    * action); with persistence off, or when build-and-claim fails, it
+    * is the eager localCheckpoint handle. An EMPTY build persists
+    * like any other and reads back as an empty relation with the
+    * recorded schema.
     */
   def materialize(s: SparkSession, family: String, corpusDir: String)(
       build: => DataFrame): DataFrame =
-    claim(s, family, corpusDir)(commit(s, _, build)) { (dir, _) =>
-      unwrap(LakeMerge.read(s, dir))
+    claim(s, family, corpusDir) { tmp =>
+      val df = build
+      df.write.parquet(tmp)
+      writeManifest(s, tmp, Some(df.schema))
+    } { (dir, _) =>
+      val ddl = readV0(s, dir).extract[Manifest].schemaDdl.get
+      s.read.schema(StructType.fromDDL(ddl)).parquet(dir)
     }(build.localCheckpoint(true))
 
-  /** Lake-else-build for a whole TABLE-DIRECTORY artifact (r15
+  /** Stored-else-build for a whole TABLE-DIRECTORY artifact (r15
     * verdict #8) — the L-family demo tables (merged / conditional /
     * MOR / restored) whose artifact is not one relation but a lake
     * dir with a specific VERSION HISTORY the consumers pin into
@@ -388,16 +479,17 @@ object ArtifactStore {
   /** Retention for the artifact root: every engine recompile and
     * every corpus change re-addresses its artifacts under a fresh
     * fingerprint, stranding the old dirs — this is the cleanup a
-    * deployment cron runs. An artifact table's age is its OWN lake
-    * commit stamp (v0's `committedAtMs` — artifact tables are
-    * single-commit); anything older than the cutoff is deleted,
-    * whole table dirs at a time. Unparseable dirs (a torn
-    * half-written build that never committed) are deleted too — with
-    * no v0 manifest nothing can ever read them — but only once their
-    * directory mtime is past the cutoff: a build's data files land in
-    * its `.build-*` dir BEFORE the manifest commit, so an
-    * unconditional delete would race an in-flight build in another
-    * session and strip its persist out from under the init. Returns
+    * deployment cron runs. An artifact's age is its OWN v0 stamp
+    * (`committedAtMs`, which both the store's manifest and a
+    * [[materializeDir]] lake table carry); anything older than the
+    * cutoff is deleted, whole address dirs at a time. Unparseable
+    * dirs (a torn half-written build that never committed) are
+    * deleted too — with no v0 manifest nothing can ever read them —
+    * but only once their directory mtime is past the cutoff: a
+    * build's data files land in its `.build-*` dir BEFORE the
+    * manifest, so an unconditional delete would race an in-flight
+    * build in another session and strip its persist out from under
+    * the claim. Returns
     * the deleted dirs. Safe to run concurrently with readers of LIVE
     * fingerprints (current code + corpus always re-derives a current
     * address, and a current build is never older than the cutoff a
@@ -415,8 +507,8 @@ object ArtifactStore {
         val dir = fp.getPath.toString
         val stamp =
           try {
-            if (!f.exists(new Path(s"$dir/_manifest/v0.json"))) None
-            else LakeMerge.manifest(spark, dir, Some(0)).committedAtMs
+            if (!exists(spark, dir)) None
+            else (readV0(spark, dir) \ "committedAtMs").extractOpt[Long]
           } catch { case scala.util.control.NonFatal(_) => None }
         // stamped dirs expire by their commit stamp; unstamped/torn
         // dirs by directory mtime (an in-flight build lands data
@@ -430,21 +522,20 @@ object ArtifactStore {
     deleted.toSeq
   }
 
-  /** Lake-else-build-and-commit for a DRIVER-SIDE artifact (codebook
-    * arrays, bound pairs, merge tables): the value round-trips
-    * through a small DataFrame committed and claimed by [[claim]], so
-    * a fresh session re-collects the trained model instead of
+  /** Stored-else-build-and-write for a DRIVER-SIDE artifact
+    * (codebook arrays, bound pairs, merge tables, scalars): the value
+    * is one Java-serialized file claimed by [[claim]], and a fresh
+    * session reads it back on the driver with no Spark job instead of
     * re-training it. Returns the value itself when this call built
-    * it, the lake's copy otherwise; with persistence off, or when
+    * it, the stored copy otherwise; with persistence off, or when
     * build-and-claim fails, the value is built and served
     * session-local.
     */
   def materializeValue[V](s: SparkSession, family: String,
-      corpusDir: String)(build: => V)(
-      toDf: V => DataFrame)(fromDf: DataFrame => V): V =
+      corpusDir: String)(build: => V): V =
     claim(s, family, corpusDir) { tmp =>
-      val v = build; commit(s, tmp, toDf(v)); v
+      val v = build; writeValue(s, tmp, v); v
     } { (dir, built) =>
-      built.getOrElse(fromDf(unwrap(LakeMerge.read(s, dir))))
+      built.getOrElse(readValue(s, dir).asInstanceOf[V])
     }(build)
 }

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.sources.ArtifactStore
 
-/** The lake-resident artifact contract (r12 verdict item 1): a
-  * standing artifact built in session A is an explicit LakeMerge
-  * commit; a FRESH session serves it from the lake with ZERO rebuild
+/** The stored artifact contract (r12 verdict item 1): a standing
+  * artifact built in session A is one write claimed by one rename
+  * (plain parquet for a relation, one serialized file for a value);
+  * a FRESH session serves it from the store with ZERO rebuild
   * (no propagate rounds, no training jobs — asserted through the
   * build/load telemetry, which increments `lake_load` and leaves
   * `build_persist` untouched); and the served content is
@@ -383,7 +385,7 @@ class ArtifactStoreSpec extends SparkSpec {
       }
       assert(sorted(df) === Seq("[1,2]", "[3,4]"))
       val v = ArtifactStore.materializeValue(spark, "file.value", corpus)(
-        Seq(5L, 6L))(_.toDF("x"))(_.as[Long].collect().toSeq)
+        Seq(5L, 6L))
       assert(v === Seq(5L, 6L))
       val dir = ArtifactStore.materializeDir(spark, "file.dir", corpus) {
         tmp =>
@@ -418,6 +420,144 @@ class ArtifactStoreSpec extends SparkSpec {
       assert(d1 !== d2)
       val d3 = ArtifactStore.tableDir(spark, "dedup.gramIndex", sf)
       assert(d1 !== d3, "families are separate tables")
+    }
+  }
+
+  /** `body`'s result and the Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftListenerBridge.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.GraftListenerBridge.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("job budget: a fresh session loads a value artifact with no " +
+    "Spark job, and a relation artifact with none before the " +
+    "consumer's own action") {
+    withTempRoot {
+      import spark.implicits._
+      val corpus = tempCorpus()
+      val cb = Array((0L, Array(1L, 2L)), (1L, Array(3L, 4L)))
+      ArtifactStore.materializeValue(spark, "budget.value", corpus)(cb)
+      ArtifactStore.materialize(spark, "budget.df", corpus)(
+        (1L to 20L).map(k => (k, k * 7L)).toDF("k", "v"))
+      val s2 = spark.newSession()
+      val (v, valueJobs) = jobsDuring(
+        ArtifactStore.materializeValue(s2, "budget.value", corpus)(
+          sys.error("a stored value must not rebuild")
+            : Array[(Long, Array[Long])]))
+      assert(valueJobs === 0, "a value load must run no Spark job")
+      assert(v.map(c => (c._1, c._2.toSeq)).toSeq ===
+        cb.map(c => (c._1, c._2.toSeq)).toSeq)
+      val (df, loadJobs) = jobsDuring(
+        ArtifactStore.materialize(s2, "budget.df", corpus)(
+          sys.error("a stored relation must not rebuild"): DataFrame))
+      assert(loadJobs === 0,
+        "a relation load must run no job before the consumer's action")
+      assert(df.count() === 20)
+      assert(Seq("budget.value", "budget.df").map(Artifacts.countOf(_,
+        "lake_load")) === Seq(1, 1))
+    }
+  }
+
+  test("every value shape the engine stores passes the class " +
+    "allowlist: a fresh session reads each back without rebuilding") {
+    withTempRoot {
+      val corpus = tempCorpus()
+      def arr(n: Int) = Array.tabulate(n)(i => (i.toLong, Array(i.toLong, -i.toLong)))
+      // codebooks, the two-level codebook, SQ8 and BM25 pairs, small
+      // and hash-backed bound maps, BPE merges, the LM mean
+      val shapes: Seq[(String, Any)] = Seq(
+        "codebook" -> arr(3),
+        "twoLevel" -> (arr(2), arr(4)),
+        "sq8" -> (Array(1L, 2L), Array(3L, 4L)),
+        "bm25" -> (7L, 9L),
+        "smallMap" -> Map("a" -> Array(1L), "b" -> Array.empty[Long]),
+        "hashMap" -> (1 to 9).map(i => s"c$i" -> Array(i.toLong)).toMap,
+        "merges" -> Array(("a", "b"), ("ab", "c")),
+        "mean" -> 42L)
+      def show(v: Any): Any = v match {
+        case a: Array[_] => a.toSeq.map(show)
+        case p: Product => p.productIterator.map(show).toSeq
+        case m: Map[_, _] => m.toSeq.map(show).sortBy(_.toString)
+        case x => x
+      }
+      shapes.foreach { case (n, v) =>
+        ArtifactStore.materializeValue(spark, s"shape.$n", corpus)(v) }
+      val s2 = spark.newSession()
+      shapes.foreach { case (n, v) =>
+        val back = ArtifactStore.materializeValue(s2, s"shape.$n", corpus)(
+          sys.error(s"stored $n must not rebuild"): Any)
+        assert(show(back) === show(v), s"$n must round-trip")
+      }
+      assert(shapes.map(p => Artifacts.countOf(s"shape.${p._1}",
+        "lake_load")) === shapes.map(_ => 1))
+    }
+  }
+
+  test("a planted value file naming a class outside the allowlist is " +
+    "refused unread, tombstoned and rebuilt") {
+    withTempRoot {
+      val corpus = tempCorpus()
+      var builds = 0
+      def build(): Array[(Long, Array[Long])] = {
+        builds += 1; Array((1L, Array(2L, 3L)))
+      }
+      ArtifactStore.materializeValue(spark, "planted.value", corpus)(
+        build())
+      val dir = new java.io.File(
+        ArtifactStore.tableDir(spark, "planted.value", corpus))
+      // overwrite the one value file through the Hadoop FS, so its
+      // checksum still matches: only the class allowlist stands
+      // between the stream and the planted class's readObject
+      val files = dir.listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith(".")).toSeq
+      assert(files.size === 1, s"one value file expected, found $files")
+      val p = new org.apache.hadoop.fs.Path(files.head.toURI)
+      val out = new java.io.ObjectOutputStream(p.getFileSystem(
+        spark.sessionState.newHadoopConf()).create(p, true))
+      try out.writeObject((1L, new ArtifactStoreSpec.Planted))
+      finally out.close()
+      ArtifactStoreSpec.plantedRan.set(false)
+      val s2 = spark.newSession()
+      val v = ArtifactStore.materializeValue(s2, "planted.value", corpus)(
+        build())
+      assert(!ArtifactStoreSpec.plantedRan.get,
+        "the planted class's readObject must never run")
+      assert(builds === 2, "a refused value file must rebuild")
+      assert(v.map(_._2.toSeq).toSeq === Seq(Seq(2L, 3L)))
+      val tombs = dir.getParentFile.listFiles()
+        .filter(_.getName.startsWith(dir.getName + ".tombstone-"))
+      assert(tombs.length === 1,
+        s"expected one tombstone next to ${dir.getName}")
+      // the rebuild re-persisted: a third session loads it
+      val s3 = spark.newSession()
+      ArtifactStore.materializeValue(s3, "planted.value", corpus)(build())
+      assert(builds === 2, "the quarantine rebuild must re-persist")
+    }
+  }
+}
+
+object ArtifactStoreSpec {
+  val plantedRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** A Serializable class no value artifact is made of; reading one
+    * runs its `readObject`, which marks that it ran.
+    */
+  final class Planted extends Serializable {
+    private def readObject(in: java.io.ObjectInputStream): Unit = {
+      plantedRan.set(true)
+      in.defaultReadObject()
     }
   }
 }
